@@ -32,7 +32,7 @@ from minarrow_spark.session import get_spark
 
 # 10x-replica tier ----------------------------------------------------------
 
-_X10_DIR = "/root/repo/.scratch/bench_x10"
+_X10_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".scratch", "bench_x10")
 _X10_SHIFT = 100_000_000  # divisible by every modulus the queries use (8,10,20,25)
 _X10_COPIES = 10
 # spanning subset: scan-agg, multi-join, LSH dedup, event window, ANN scan,
@@ -235,10 +235,6 @@ def _run_x10(spark, qs, sf: float, global_cal: float) -> dict:
 
 
 def main() -> None:
-    # Forensics sidecars (minarrow_spark/forensics.py) execute an extra
-    # guarded collect inside the query build — correctness-run diagnostics
-    # that must stay OUT of bench's timed windows.
-    os.environ.setdefault("MINARROW_FORENSICS", "0")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0

@@ -36,7 +36,7 @@ from minarrow_spark.sources.arrow_io import (
     to_arrow,
     to_matrix,
 )
-from minarrow_spark.sources.catalog import load_table, load_tables, register_views
+from minarrow_spark.sources.catalog import load_table
 
 __all__ = [
     "MinTable",
@@ -46,9 +46,7 @@ __all__ = [
     "from_matrix",
     "get_spark",
     "load_table",
-    "load_tables",
     "map_in_arrow",
-    "register_views",
     "to_arrow",
     "to_matrix",
 ]

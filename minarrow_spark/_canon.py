@@ -1,11 +1,9 @@
-"""Canonical value rendering shared by the oracle comparator
-(tests/oracle_utils) and the forensics sidecar (minarrow_spark/forensics).
+"""Canonical value rendering for the oracle comparator (tests/oracle_utils).
 
-One implementation on purpose: the sidecar's whole value is that its
-digests match the comparator's view of the same rows — a hand-maintained
-copy would silently diverge the moment canonicalization changes (r6
-advisory). Lives in the package (not tests/) because the external driver's
-process only has the package on its path.
+Lives in the package rather than tests/ so anything in the package that
+digests rows renders them exactly as the comparator does — a
+hand-maintained copy would silently diverge the moment canonicalization
+changes.
 """
 
 from __future__ import annotations

@@ -27,6 +27,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from minarrow_spark._sql import ident
+
 DEC = "decimal(18,2)"
 
 _NUMERIC_TYPES = (
@@ -91,30 +93,22 @@ def floordiv(a: Column, b: Column) -> Column:
     """Floor division toward −∞ (reference FloorDiv), null on zero divisor.
 
     Float path: `floor(a / b)` in double. For integral columns use
-    ``floordiv_int`` — routing through double here would silently lose
+    ``floordiv_int_sql`` — routing through double here would silently lose
     precision for |values| > 2^53 (`table_op` routes by dtype)."""
     return F.floor(F.try_divide(a, b))
 
 
-def floordiv_int(a: Column, b: Column) -> Column:
-    """Exact floor division for integral columns (reference FloorDiv on
-    signed ints, `src/enums/operators.rs:41-47`): Spark's truncating `div`
-    adjusted toward −∞ when the remainder is nonzero and the signs differ.
-    Stays in 64-bit integer math end-to-end — exact for the full long range,
-    where the float path degrades beyond 2^53. Null on zero divisor
-    (masked-array rule); the CASE guard keeps ANSI mode from raising."""
-    q = F.call_function("div", a, b)
-    adj = F.when(((a % b) != 0) & ((a < 0) != (b < 0)), F.lit(1)).otherwise(F.lit(0))
-    return F.when(b == 0, F.lit(None).cast("long")).otherwise(q - adj)
-
-
 def floordiv_int_sql(a: str, b: str) -> str:
-    """SQL-string twin of :func:`floordiv_int` — the SAME expression tree,
-    emitted as Spark SQL for builders on the bench-timed path (the q01/q10
-    SQL-string build cut: one parse round-trip instead of ~10 py4j Column
-    ops per call site). The floor-division contract stays single-sourced in
-    this module; tests/test_semantics_props.py pins the two forms value-
-    and schema-identical over the signed/zero-divisor domain."""
+    """Exact floor division of the integral SQL expressions ``a`` by ``b``
+    as a Spark SQL expression (reference FloorDiv on signed ints,
+    `src/enums/operators.rs:41-47`): Spark's truncating `div` adjusted
+    toward −∞ when the remainder is nonzero and the signs differ. Stays in
+    64-bit integer math end-to-end — exact for the full long range, where
+    the float path degrades beyond 2^53. Null on zero divisor (masked-array
+    rule); the CASE guard keeps ANSI mode from raising. Column call sites
+    wrap it in ``F.expr`` (names quoted via ``minarrow_spark._sql.ident``):
+    one parse round-trip instead of ~10 py4j Column ops. Pinned against
+    Python ``//`` and DuckDB in tests/test_semantics_props.py."""
     return (
         f"CASE WHEN ({b}) = 0 THEN CAST(NULL AS BIGINT) "
         f"ELSE (({a}) div ({b})) - (CASE WHEN (({a}) % ({b})) != 0 "
@@ -144,17 +138,19 @@ def table_op(df: DataFrame, other, op: str = "+") -> DataFrame:
         f.name for f in df.schema.fields if isinstance(f.dataType, _INTEGRAL)
     }
     ops = {
-        "+": lambda c, x, i: c + x,
-        "-": lambda c, x, i: c - x,
-        "*": lambda c, x, i: c * x,
-        "/": lambda c, x, i: F.try_divide(c, F.lit(x)),
-        "%": lambda c, x, i: remainder(c, F.lit(x)),
+        "+": lambda c, x, i: F.col(c) + x,
+        "-": lambda c, x, i: F.col(c) - x,
+        "*": lambda c, x, i: F.col(c) * x,
+        "/": lambda c, x, i: F.try_divide(F.col(c), F.lit(x)),
+        "%": lambda c, x, i: remainder(F.col(c), F.lit(x)),
         # Integral columns take the exact 64-bit path; float columns the
         # double path — mirrors the reference's per-dtype kernel routing.
         "//": lambda c, x, i: (
-            floordiv_int(c, F.lit(x)) if i else floordiv(c, F.lit(x))
+            F.expr(floordiv_int_sql(ident(c), str(x)))
+            if i
+            else floordiv(F.col(c), F.lit(x))
         ),
-        "**": lambda c, x, i: F.pow(c, x),
+        "**": lambda c, x, i: F.pow(F.col(c), x),
     }
     if op not in ops:
         raise ValueError(f"unsupported op {op!r}")
@@ -162,7 +158,7 @@ def table_op(df: DataFrame, other, op: str = "+") -> DataFrame:
     int_scalar = isinstance(other, int) and not isinstance(other, bool)
     return df.select(
         *[
-            ops[op](F.col(c), other, c in integral and int_scalar).alias(c)
+            ops[op](c, other, c in integral and int_scalar).alias(c)
             if c in num
             else F.col(c)
             for c in df.columns

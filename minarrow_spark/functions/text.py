@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from minarrow_spark._sql import ident
+
 # Per-language stopword regexes (word-boundary anchored). Deliberately tiny:
 # this is an n-gram/stopword *heuristic*, not a model — the point is the
 # distributed shape (one codegen'd projection), not linguistic accuracy.
@@ -50,22 +52,16 @@ def let_(col: Column, body) -> Column:
     return F.element_at(F.transform(F.array(col), body), 1)
 
 
-def token_count(text: Column) -> Column:
-    """Whitespace token count; '' → 0 (split('') yields [''] otherwise)."""
-    t = F.trim(text)
-    return F.when(t == "", F.lit(0)).otherwise(
-        F.size(F.split(t, WS))
-    ).cast("bigint")
-
-
 def token_count_sql(text: str) -> str:
-    """SQL-string twin of :func:`token_count` (build-cost cut for bench-timed
-    builders, the q01/q10 pattern). The whitespace contract stays single-
-    sourced: the regex is THIS module's ``WS``, backslash-escaped so the
-    Spark SQL parser reproduces the byte-identical pattern string the Column
-    form passes (a bare ``\\t`` in a SQL literal would become a literal tab —
-    same regex semantics but a different pattern byte sequence). Twin
-    equivalence pinned in tests/test_semantics_props.py."""
+    """Whitespace token count of the SQL expression ``text`` as a BIGINT
+    Spark SQL expression; '' → 0 (split('') yields [''] otherwise). Column
+    call sites wrap it in ``F.expr`` (names quoted via
+    ``minarrow_spark._sql.ident``): one parse round-trip instead of ~10 py4j
+    Column ops. The regex is THIS module's ``WS``, backslash-escaped so the
+    Spark SQL parser yields the byte-identical pattern string (a bare
+    ``\\t`` in a SQL literal would become a literal tab — same regex
+    semantics but a different pattern byte sequence). Pinned in
+    tests/test_semantics_props.py."""
     ws = WS.replace("\\", "\\\\")
     return (
         f"CAST(CASE WHEN trim({text}) = '' THEN 0 "
@@ -120,12 +116,13 @@ def lang_predict(text: Column) -> Column:
     return expr
 
 
-def quality_score(text: Column) -> Column:
-    """Rational-arithmetic quality score in (0, 1]:
+def quality_score(text_col: str) -> Column:
+    """Rational-arithmetic quality score in (0, 1] of column ``text_col``:
     (3·stopword_hits + tokens) / (tokens + 5·punct + mean_token_len + 1).
     Long-word gibberish and punctuation soup score low; stopword-ful prose
     scores high. Pure double ops → bit-deterministic."""
-    n_tok = token_count(text).cast("double")
+    text = F.col(text_col)
+    n_tok = F.expr(token_count_sql(ident(text_col))).cast("double")
     n_char = F.length(text).cast("double")
     stop = F.regexp_count(F.lower(text), F.lit(LANG_PATTERNS["en"])).cast("double")
     punct = F.regexp_count(text, F.lit(PUNCT_PATTERN)).cast("double")

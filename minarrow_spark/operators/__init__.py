@@ -7,7 +7,6 @@ from minarrow_spark.operators.sampling import (
 from minarrow_spark.operators.dedup import (
     augment_with_near_dups,
     doc_shingle_arrays,
-    doc_shingles,
     exact_dedup,
     jaccard_pairs,
     jaccard_pairs_arr,
@@ -26,18 +25,18 @@ from minarrow_spark.operators.pca import gramian, pca_fit, pca_project
 from minarrow_spark.operators.joins import asof_join
 from minarrow_spark.operators.similarity import (
     brute_force_topk,
-    cosine_sim,
+    cosine_sim_sql,
     dequantize_embeddings,
     quantize_embeddings,
 )
 
 __all__ = [
-    "augment_with_near_dups", "doc_shingle_arrays", "doc_shingles",
+    "augment_with_near_dups", "doc_shingle_arrays",
     "exact_dedup", "jaccard_pairs", "jaccard_pairs_arr", "lsh_candidates",
     "minhash_lsh_jaccard", "minhash_signatures", "simhash16", "asof_join",
     "brute_force_topk", "dequantize_embeddings", "quantize_embeddings", "hash_sample", "sample_mask",
     "stratified_hash_sample", "train_test_split",
-    "cosine_sim", "connected_components", "dedup_clusters",
+    "cosine_sim_sql", "connected_components", "dedup_clusters",
     "cluster_balanced_sample", "kmeans_assign", "kmeans_fit",
     "gramian", "pca_fit", "pca_project",
 ]

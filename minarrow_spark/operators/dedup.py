@@ -71,18 +71,6 @@ def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def doc_shingles(docs: DataFrame, k: int = 3) -> DataFrame:
-    """Distinct word-k-gram shingles per doc: (doc_id, shingle).
-
-    Distinctness is enforced *within the row* (array_distinct before the
-    explode) — no shuffle; the output is globally duplicate-free because
-    doc_id is unique per row."""
-    return docs.select(
-        "doc_id",
-        F.explode(F.array_distinct(shingles(F.col("text"), k))).alias("shingle"),
-    )
-
-
 def doc_shingle_arrays(docs: DataFrame, k: int = 3) -> DataFrame:
     """Per-doc distinct shingle arrays: (doc_id, sh_arr). The zero-shuffle
     representation — everything derivable per-row stays per-row."""
@@ -723,7 +711,8 @@ def simhash_dedup(
     identical text ⇒ identical simhash ⇒ c² redundant band pairs) and run
     this on representatives — banded pair generation is quadratic in
     exact-clone count by construction."""
-    from minarrow_spark.functions.text import token_count
+    from minarrow_spark._sql import ident
+    from minarrow_spark.functions.text import token_count_sql
     from minarrow_spark.operators.graph import dedup_clusters
 
     info: dict = {"width": width}
@@ -731,7 +720,7 @@ def simhash_dedup(
         stats = docs.agg(
             F.approx_count_distinct(F.md5(F.col(text_col))).alias("n"),
             F.percentile_approx(
-                token_count(F.col(text_col)), F.lit(0.5)
+                F.expr(token_count_sql(ident(text_col))), F.lit(0.5)
             ).alias("med"),
         ).collect()[0]
         bits, bands = simhash_width_auto(

@@ -19,35 +19,22 @@ import pandas as pd  # module-level: pandas_udf resolves type hints in module gl
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def _as_double(arr: Column) -> Column:
-    return arr.cast("array<double>")
+from minarrow_spark._sql import ident
 
 
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(_as_double(a), _as_double(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+def dot_sql(a: str, b: str) -> str:
+    """Dot product of two numeric arrays as a Spark SQL expression: both
+    widened to double first, products left-folded from 0.0D (a bare SQL
+    0.0 is DECIMAL(2,1) and would flip the fold type)."""
+    return (
+        f"aggregate(zip_with(CAST({a} AS ARRAY<DOUBLE>),"
+        f" CAST({b} AS ARRAY<DOUBLE>), (x, y) -> x * y), 0.0D,"
+        f" (acc, v) -> acc + v)"
     )
 
 
-def norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(_as_double(a), F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-
-
-def cosine_sim(a: Column, b: Column, digits: int = 6) -> Column:
-    """Cosine similarity rounded to ``digits`` (cross-engine determinism:
-    double math δ ~1e-15 ≪ rounding grid). try_divide, not `/`: a
-    zero-norm vector must yield NULL under BOTH ANSI (the vanilla-session
-    default in Spark 4, where `/ 0.0` ERRORS) and legacy mode — the same
-    contract cosine_sim_arrow enforces with its explicit NA mask."""
-    return F.round(F.try_divide(dot(a, b), norm(a) * norm(b)), digits)
-
-
-def _norm_sql(a: str) -> str:
+def norm_sql(a: str) -> str:
+    """Euclidean norm of a numeric array as a Spark SQL expression."""
     return (
         f"sqrt(aggregate(CAST({a} AS ARRAY<DOUBLE>), 0.0D,"
         f" (acc, x) -> acc + x * x))"
@@ -55,31 +42,27 @@ def _norm_sql(a: str) -> str:
 
 
 def cosine_sim_sql(a: str, b: str, digits: int = 6) -> str:
-    """SQL-string twin of :func:`cosine_sim` — the SAME expression tree
-    (modulo lambda-variable names, which Catalyst auto-numbers on the Column
-    side), emitted for bench-timed builders (the r11 q42 build-cut pattern:
-    one parse round-trip instead of ~25 py4j Column/lambda ops). The
-    determinism + try_divide zero-norm contract stays single-sourced here,
-    next to the Column form; twin equivalence (values, types, NULL on
-    zero-norm) pinned in tests/test_semantics_props.py. Note the 0.0D
-    suffix: a bare SQL 0.0 is DECIMAL(2,1) and would flip the fold type."""
-    dot_s = (
-        f"aggregate(zip_with(CAST({a} AS ARRAY<DOUBLE>),"
-        f" CAST({b} AS ARRAY<DOUBLE>), (x, y) -> x * y), 0.0D,"
-        f" (acc, v) -> acc + v)"
-    )
-    return f"round(try_divide({dot_s}, {_norm_sql(a)} * {_norm_sql(b)}), {digits})"
+    """Cosine similarity rounded to ``digits`` as a Spark SQL expression over
+    the SQL expressions ``a``/``b`` (column names go in through
+    ``minarrow_spark._sql.ident``); Column call sites wrap it in ``F.expr``.
+    Cross-engine determinism: double math δ ~1e-15 ≪ rounding grid.
+    try_divide, not `/`: a zero-norm vector must yield NULL under BOTH ANSI
+    (the vanilla-session default in Spark 4, where `/ 0.0` ERRORS) and
+    legacy mode — the same contract cosine_sim_arrow enforces with its
+    explicit NA mask. Values, types and the zero-norm NULL are pinned in
+    tests/test_semantics_props.py."""
+    return f"round(try_divide({dot_sql(a, b)}, {norm_sql(a)} * {norm_sql(b)}), {digits})"
 
 
 def cosine_sim_arrow(digits: int = 6) -> "Column":
     """Arrow-batched cosine for the pair-verify HOT PATH: a pandas_udf whose
     batch body is three numpy einsum reductions over a stacked (n, dim)
     float64 matrix — SIMD C loops instead of the interpreted per-element
-    Catalyst lambda that `cosine_sim`'s aggregate/zip_with evaluates as
+    Catalyst lambda that `cosine_sim_sql`'s aggregate/zip_with evaluates as
     (higher-order functions never enter whole-stage codegen; the r4 verdict
     flagged this as the largest remaining CPU inefficiency).
 
-    Determinism: identical contract to `cosine_sim` — double products of
+    Determinism: identical contract to `cosine_sim_sql` — double products of
     float inputs are exact; only the SUM ORDER differs (numpy pairwise vs
     left fold), a δ ~1e-15 difference absorbed by the 6-digit rounding grid.
     The DuckDB oracle (`list_cosine_similarity`) already sums in its own
@@ -119,7 +102,7 @@ def cosine_sim_arrow(digits: int = 6) -> "Column":
             out = np.round(num / den, digits)
         # Zero-norm inputs divide 0/0 → NaN/inf; mask to a REAL null (the
         # pandas nullable Float64 NA, which Arrow transfers as null) to
-        # mirror cosine_sim's SQL divide-by-zero→NULL semantics, instead of
+        # mirror cosine_sim_sql's divide-by-zero→NULL semantics, instead of
         # depending on implicit NaN-as-null conversion (r5 advisory).
         masked = pd.array(out, dtype="Float64")
         masked[~np.isfinite(out)] = pd.NA
@@ -142,25 +125,20 @@ def brute_force_topk(
     Plan: broadcast-nested-loop (queries tiny) → per-row cosine in codegen →
     rank window partitioned by query. Scales linearly in candidate count.
 
-    Built via SQL strings (r11 build-cut, q42 pattern): identical plan to
-    the Column form (after-dump diff empty modulo expression ids and
-    auto-numbered lambda-variable names), ~0.1 s less py4j build cost per
-    bench rep on the q38 headline path. cosine_sim_sql is the twin-pinned
-    emitter of cosine_sim.
+    Built via SQL strings (r11 build-cut, q42 pattern): ~0.1 s less py4j
+    build cost per bench rep on the q38 headline path than the same plan
+    composed from Column operators. Every column name is backtick-quoted.
     """
+    qi, ci = ident(q_id), ident(c_id)
     scored = (
         candidates.join(F.broadcast(queries))
-        .where(f"`{c_id}` != `{q_id}`")
-        .selectExpr(
-            f"`{q_id}`",
-            f"`{c_id}`",
-            f"{cosine_sim_sql(q_vec, c_vec)} AS sim",
-        )
+        .where(f"{ci} != {qi}")
+        .selectExpr(qi, ci, f"{cosine_sim_sql(ident(q_vec), ident(c_vec))} AS sim")
     )
     return scored.selectExpr(
         "*",
-        f"CAST(row_number() OVER (PARTITION BY `{q_id}`"
-        f" ORDER BY sim DESC, `{c_id}`) AS BIGINT) AS rank",
+        f"CAST(row_number() OVER (PARTITION BY {qi}"
+        f" ORDER BY sim DESC, {ci}) AS BIGINT) AS rank",
     ).where(f"rank <= {k}")
 
 
@@ -349,7 +327,7 @@ def cell_blocked_pairs(
     )
     selfsim = (
         dup_reps.join(dv, dup_reps.rep == dv.rid)
-        .select("rep", cosine_sim(F.col("v"), F.col("v")).alias("sim"))
+        .select("rep", F.expr(cosine_sim_sql("`v`", "`v`")).alias("sim"))
         .filter(F.col("sim") >= threshold)
     )
     within = (

@@ -8,7 +8,6 @@ Used by tests/test_scale_ops.py and the SCALE.md shuffle-inventory audit.
 """
 
 from minarrow_spark.plans.inspect import (
-    assert_no_shuffle,
     count_exchanges,
     plan_summary,
     pushed_filters,
@@ -16,7 +15,6 @@ from minarrow_spark.plans.inspect import (
 )
 
 __all__ = [
-    "assert_no_shuffle",
     "count_exchanges",
     "plan_summary",
     "pushed_filters",

@@ -30,14 +30,6 @@ def count_exchanges(df: DataFrame) -> tuple[int, int]:
     return shuffle, broadcast
 
 
-def assert_no_shuffle(df: DataFrame) -> None:
-    """Raise AssertionError (with the plan) if any shuffle exchange exists —
-    the contract check for bucketed / co-partitioned layouts."""
-    plan = _executed_plan(df)
-    if "Exchange hashpartitioning" in plan or "Exchange rangepartitioning" in plan:
-        raise AssertionError(f"plan contains a shuffle exchange:\n{plan}")
-
-
 def pushed_filters(df: DataFrame) -> list[str]:
     """PushedFilters lists per parquet scan (empty string → nothing pushed)."""
     return re.findall(r"PushedFilters: \[([^\]]*)\]", _formatted(df))

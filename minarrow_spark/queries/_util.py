@@ -6,6 +6,7 @@ import os
 import shutil
 import tempfile
 from pathlib import Path
+from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -53,8 +54,12 @@ def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # per bench rep by every par()-using timed builder). Metadata only (a lazy
 # plan object, the load_table plan-cache class): nothing row-level is
 # cached, a fresh input df (cache invalidation, non-catalog caller) simply
-# misses, and entries die with their input df.
-_PAR_MEMO: "WeakKeyDictionary[DataFrame, DataFrame]" = None  # type: ignore[assignment]
+# misses, and entries die with their input df. When par() returns its
+# input unchanged the memo stores _SAME instead of the df itself: a value
+# that references its own weak key would keep the entry alive forever.
+# Built at import so concurrent first calls share one dict.
+_PAR_MEMO: WeakKeyDictionary = WeakKeyDictionary()
+_SAME = object()
 
 
 def par(df: DataFrame) -> DataFrame:
@@ -70,16 +75,12 @@ def par(df: DataFrame) -> DataFrame:
     raw scan rows (the cheapest point in the pipeline, before any explode/
     hash fan-out multiplies bytes). Measured at sf0.1: q35 minhash map stage
     32× parallel vs single-core, headline ~1.4s vs 2.5-8.6s erratic."""
-    global _PAR_MEMO
-    if _PAR_MEMO is None:
-        from weakref import WeakKeyDictionary
-
-        _PAR_MEMO = WeakKeyDictionary()
     hit = _PAR_MEMO.get(df)
     if hit is not None:
-        return hit
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    out = df.repartition(target) if df.rdd.getNumPartitions() < target else df
-    _PAR_MEMO[df] = out
+        return df if hit is _SAME else hit
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() >= target:
+        _PAR_MEMO[df] = _SAME
+        return df
+    out = _PAR_MEMO[df] = df.repartition(target)
     return out

@@ -723,12 +723,6 @@ def q36_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # given the checkpointed redges — both are driver-side loops of small
     # Spark jobs, so they run CONCURRENTLY (thread-submitted jobs, the
     # q35 orchestration pattern) instead of back-to-back.
-    # MINARROW_Q36_SERIAL=1 runs them sequentially — an r5-advisory switch
-    # so thread concurrency can be excluded/confirmed as a divergence
-    # source without a code change.
-    import os as _os
-
-    _serial = _os.environ.get("MINARROW_Q36_SERIAL") == "1"
     # Measured refusal (r8): scoping AQE OFF around this loop section —
     # under AQE a lazy localCheckpoint materializes its upstream stages at
     # CALL time, so the BSP loops pay ~7 jobs/iteration of scheduling —
@@ -738,23 +732,16 @@ def q36_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the floor cuts that survive both scales are the double-step CC
     # rounds, the lazy members fold, and simhash's SQL-string expression
     # build (~900 py4j round-trips deleted).
-    if _serial:
-        pr = pagerank_lumped(
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(1) as _pool:
+        _fut_pr = _pool.submit(
+            pagerank_lumped,
             redges, gsz, src="da", dst="db", id_col="rep", size_col="gc",
             iters=_PR_ITERS, damping=_PR_DAMP, scale=_PR_SCALE,
         )
         rep_cl = dedup_clusters(redges)
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(1) as _pool:
-            _fut_pr = _pool.submit(
-                pagerank_lumped,
-                redges, gsz, src="da", dst="db", id_col="rep", size_col="gc",
-                iters=_PR_ITERS, damping=_PR_DAMP, scale=_PR_SCALE,
-            )
-            rep_cl = dedup_clusters(redges)
-            pr = _fut_pr.result()
+        pr = _fut_pr.result()
     solo_dups = (  # c≥2 groups with no external edges: their own cluster
         gsz.filter(F.col("gc") >= 2)
         .join(rep_cl.select(F.col("doc_id").alias("rep")), "rep", "left_anti")
@@ -787,24 +774,7 @@ def q36_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("degree").cast("bigint").alias("aux"),
         )
     )
-    result = hash_tiers.unionByName(cl).unionByName(prt)
-    # Pinned investigation (r5 verdict task 1): leave a canonical record of
-    # what THIS process computed — per-tier md5s localize any future driver
-    # mismatch to hash/clusters/pagerank in one round. always=True so it
-    # fires inside the external driver's run (which sets no env vars);
-    # bench.py disables via MINARROW_FORENSICS=0 to keep timed windows
-    # clean. One guarded extra collect — tiny at the correctness tier.
-    from minarrow_spark.forensics import capture
-
-    capture(
-        "q36",
-        result,
-        spark,
-        always=True,
-        tier_col="tier",
-        extra={"serial": _serial, "pr_iters": _PR_ITERS, "sf_dir": sf_dir},
-    )
-    return result
+    return hash_tiers.unionByName(cl).unionByName(prt)
 
 
 @query(
@@ -915,16 +885,11 @@ def q37_ngram_jaccard(
     # per-gram substring allocation from the checkpoint. The oracle keeps
     # computing STRING grams independently, and jaccard over hashed grams
     # equals jaccard over string grams under the same xxhash64 collapse-
-    # key soundness class as q41/q32. The string form stays runnable as
-    # the measured A/B twin (MINARROW_Q37_GRAMS=str; SCALE.md q37 row).
-    import os
+    # key soundness class as q41/q32. The string form is the reference in
+    # test_q37_hashed_grams_cloned_corpus_oracle (SCALE.md q37 row).
+    from minarrow_spark.functions.text import char_gram_hashes
 
-    from minarrow_spark.functions.text import char_gram_hashes, char_grams
-
-    if os.environ.get("MINARROW_Q37_GRAMS") == "str":
-        gram_arr = char_grams(F.col("t"), 4)
-    else:
-        gram_arr = char_gram_hashes(F.col("t"), 4)
+    gram_arr = char_gram_hashes(F.col("t"), 4)
     # (source, n_chars//20) blocking: the synthetic near-dup variants carry
     # the base doc's n_chars verbatim, so true dups always share a block at
     # ANY bucket width — narrower buckets only cut cross-doc filler pairs

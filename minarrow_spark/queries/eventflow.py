@@ -230,14 +230,7 @@ def q46_hopping_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("n") / F.col("sz"), 6).alias("total_value"),
         F.lit(True).alias("approx_users_ok"),
     )
-    result = hop.unionByName(roll).unionByName(cohort)
-    # Opt-in forensics (MINARROW_FORENSICS=1): the rollup tier round-trips
-    # partials through at-rest files (an iterative, stateful path) — per-tier
-    # md5s localize any future driver-only flake to hop/rollup/cohort.
-    from minarrow_spark.forensics import capture
-
-    capture("q46", result, spark, tier_col="tier", extra={"sf_dir": sf_dir})
-    return result
+    return hop.unionByName(roll).unionByName(cohort)
 
 
 @query(

@@ -17,7 +17,7 @@ from minarrow_spark.functions.arithmetic import (
     exact_avg,
     exact_var_samp,
     floordiv,
-    floordiv_int,
+    floordiv_int_sql,
     remainder,
     table_op,
     try_div,
@@ -213,7 +213,7 @@ def q23_arith_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_linenumber",
         try_div(F.col("l_extendedprice"), F.col("l_discount")).alias("try_div"),
         floordiv(F.col("l_quantity") - 25.0, F.lit(7.0)).cast("bigint").alias("fdiv"),
-        floordiv_int(F.col("l_orderkey"), F.col("l_linenumber") - 3)
+        F.expr(floordiv_int_sql("`l_orderkey`", "`l_linenumber` - 3"))
         .cast("bigint")
         .alias("fdiv_int"),
         remainder(F.col("l_orderkey"), F.col("l_linenumber") - 3)
@@ -1155,7 +1155,7 @@ def q52_cov_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("tier", "var_a", "m.var_b", "m.cov")
 
     pick = lambda df: df.select("tier", "var_a", "var_b", "cov")
-    result = (
+    return (
         pick(cov)
         .unionByName(pick(kn))
         .unionByName(pick(ki))
@@ -1164,13 +1164,6 @@ def q52_cov_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(pick(pjr))
         .unionByName(pick(tr))
     )
-    # Opt-in forensics (MINARROW_FORENSICS=1): the PCA/k-means tiers carry
-    # driver-side iterative model state — per-tier md5s localize any
-    # future cross-engine flake to cov/kmeans/pca/trend in one round.
-    from minarrow_spark.forensics import capture
-
-    capture("q52", result, spark, tier_col="tier", extra={"sf_dir": sf_dir})
-    return result
 
 
 # --------------------------------------------------------------------------

@@ -16,12 +16,10 @@ are stable cross-engine (see operators/similarity.py).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from minarrow_spark.operators.similarity import brute_force_topk, cosine_sim
+from minarrow_spark.operators.similarity import brute_force_topk, cosine_sim_sql
 from minarrow_spark.queries._util import T, par, scratch_dir
 from minarrow_spark.registry import query
 
@@ -259,8 +257,8 @@ def q38b_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
       re-ranked with exact cosine. At 100 TB the coarse scan reads m = 8
       small ints per vector (the codes) instead of 64 floats — a 32× scan
       shrink — and scoring is in-scan codegen lookups: no second table,
-      no shuffle, no aggregation state (the dim-level join+agg twin is
-      kept under MINARROW_PQ_ADC=join; measured in SCALE.md).
+      no shuffle, no aggregation state (the dim-level join+agg form is the
+      reference in test_pq_adc_lut_equals_join_form; measured in SCALE.md).
 
     * tiers 'sidx' + 'sann' — the streaming incremental ANN index
       (streaming/ann.py) driven through its real at-rest files; see the
@@ -284,7 +282,7 @@ def q38b_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     iscored = (
         v.join(F.broadcast(q), "cell")
         .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", cosine_sim(F.col("q_vec"), F.col("emb")).alias("sim"))
+        .select("q_id", "vec_id", F.expr(cosine_sim_sql("`q_vec`", "`emb`")).alias("sim"))
     )
     w = W.partitionBy("q_id").orderBy(F.col("sim").desc(), "vec_id")
     ivf = (
@@ -302,7 +300,7 @@ def q38b_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         deq.join(F.broadcast(probes))
         .filter(F.col("vec_id") != F.col("q_id"))
         .select(
-            "q_id", "vec_id", cosine_sim(F.col("q_vec"), F.col("ehat")).alias("asim")
+            "q_id", "vec_id", F.expr(cosine_sim_sql("`q_vec`", "`ehat`")).alias("asim")
         )
     )
     aw = W.partitionBy("q_id").orderBy(F.col("asim").desc(), "vec_id")
@@ -316,7 +314,7 @@ def q38b_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(e, "vec_id")
         .join(F.broadcast(probes), "q_id")
         .select(
-            "q_id", "vec_id", cosine_sim(F.col("q_vec"), F.col("emb")).alias("sim")
+            "q_id", "vec_id", F.expr(cosine_sim_sql("`q_vec`", "`emb`")).alias("sim")
         )
         .withColumn("rank", F.row_number().over(w).cast("bigint"))
         .withColumn("tier", F.lit("int8"))
@@ -326,81 +324,57 @@ def q38b_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_adc_lut,
         pq_cell_keys,
         pq_centroids,
-        pq_codes,
     )
 
     cent = pq_centroids(e, vec_col="emb")  # (s, cell, ds, c) — ≤256 rows
-    if os.environ.get("MINARROW_PQ_ADC") == "join":
-        # Legacy dim-level ADC: codes ⋈ codebook ⋈ probe dims → hash agg.
-        # 320 rows per vector into the aggregate at m=8, ds=8, 5 probes —
-        # kept only as the measured A/B twin (SCALE.md q38b row).
-        codes = pq_codes(e, id_col="vec_id", vec_col="emb")  # (vec_id, s, cell)
-        qdims = (
-            probes.select("q_id", F.posexplode("q_vec").alias("d", "qx"))
-            .select(
-                "q_id",
-                (F.col("d") / 8).cast("int").alias("s"),
-                (F.col("d") % 8).alias("ds"),
-                "qx",
-            )
+    # ADC via a collected 160-entry LUT (model state — the k-means
+    # precedent): score = Σ_s lut[(q, s, cell_s)] as scaled longs, an
+    # exact regrouping of the dim-level decimal sum (pq_adc_lut docstring;
+    # test_pq_adc_lut_equals_join_form builds that join+agg form),
+    # applied as pure codegen element_at lookups. The per-(q, vec)
+    # values and therefore the top-k ORDER are identical; the 320-rows/
+    # vector join+agg is deleted from the plan.
+    lut = pq_adc_lut(cent, probes)
+    qids = sorted({k[0] for k in lut})
+    score_arrays = {
+        (q, s): F.array(
+            *[F.lit(lut.get((q, s, c), 0)).cast("long") for c in range(4)]
         )
-        adc = (
-            codes.join(F.broadcast(cent), ["s", "cell"])
-            .join(F.broadcast(qdims), ["s", "ds"])
-            .filter(F.col("vec_id") != F.col("q_id"))
-            .groupBy("q_id", "vec_id")
-            .agg(
-                F.sum((F.col("qx") * F.col("c")).cast("decimal(18,10)")).alias("adc")
+        for q in qids
+        for s in range(8)
+    }
+
+    def _adc_score(q):
+        terms = [
+            F.element_at(
+                score_arrays[(q, s)], F.element_at(F.col("_pqc"), s + 1) + 1
             )
-        )
-    else:
-        # ADC via a collected 160-entry LUT (model state — the k-means
-        # precedent): score = Σ_s lut[(q, s, cell_s)] as scaled longs, an
-        # exact regrouping of the legacy decimal sum (pq_adc_lut docstring),
-        # applied as pure codegen element_at lookups. The per-(q, vec)
-        # values and therefore the top-k ORDER are identical; the 320-rows/
-        # vector join+agg is deleted from the plan.
-        lut = pq_adc_lut(cent, probes)
-        qids = sorted({k[0] for k in lut})
-        score_arrays = {
-            (q, s): F.array(
-                *[F.lit(lut.get((q, s, c), 0)).cast("long") for c in range(4)]
-            )
-            for q in qids
             for s in range(8)
-        }
+        ]
+        total = terms[0]
+        for t in terms[1:]:
+            total = total + t
+        return total
 
-        def _adc_score(q):
-            terms = [
-                F.element_at(
-                    score_arrays[(q, s)], F.element_at(F.col("_pqc"), s + 1) + 1
+    adc = (
+        e.select("vec_id", pq_cell_keys(F.col("emb")).alias("_pqc"))
+        .select(
+            "vec_id",
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(q).cast("bigint").alias("q_id"),
+                            _adc_score(q).alias("adc"),
+                        )
+                        for q in qids
+                    ]
                 )
-                for s in range(8)
-            ]
-            total = terms[0]
-            for t in terms[1:]:
-                total = total + t
-            return total
-
-        adc = (
-            e.select("vec_id", pq_cell_keys(F.col("emb")).alias("_pqc"))
-            .select(
-                "vec_id",
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(q).cast("bigint").alias("q_id"),
-                                _adc_score(q).alias("adc"),
-                            )
-                            for q in qids
-                        ]
-                    )
-                ).alias("_qa"),
-            )
-            .select(F.col("_qa.q_id").alias("q_id"), "vec_id", F.col("_qa.adc").alias("adc"))
-            .filter(F.col("vec_id") != F.col("q_id"))
+            ).alias("_qa"),
         )
+        .select(F.col("_qa.q_id").alias("q_id"), "vec_id", F.col("_qa.adc").alias("adc"))
+        .filter(F.col("vec_id") != F.col("q_id"))
+    )
     pw = W.partitionBy("q_id").orderBy(F.col("adc").desc(), "vec_id")
     pqcand = (
         adc.withColumn("r", F.row_number().over(pw))
@@ -412,7 +386,7 @@ def q38b_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(e, "vec_id")
         .join(F.broadcast(probes), "q_id")
         .select(
-            "q_id", "vec_id", cosine_sim(F.col("q_vec"), F.col("emb")).alias("sim")
+            "q_id", "vec_id", F.expr(cosine_sim_sql("`q_vec`", "`emb`")).alias("sim")
         )
         .withColumn("rank", F.row_number().over(w).cast("bigint"))
         .withColumn("tier", F.lit("pq"))
@@ -438,8 +412,6 @@ def q38b_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # int8 at rest — the q38b int8 tier's 4× scan shrink, incrementally
     # maintained. Replay cost is 2 batches of near-fixed job-boundary
     # overhead (the q34 r9 lesson: batches cost boundaries, not rows).
-    import os as _os
-
     from minarrow_spark.streaming.ann import ann_writer
 
     scratch = scratch_dir("sann", sf_dir)
@@ -604,7 +576,7 @@ def q39_similar_pairs(
     of three) — same float ops in the same order, bit-identical sims,
     measured ~2.5× faster. The quadratic form itself is the point of this
     tier and is deliberately kept."""
-    from minarrow_spark.operators.similarity import dot, norm
+    from minarrow_spark.operators.similarity import dot_sql, norm_sql
 
     e = par(T(spark, sf_dir, "embeddings"))
     n = e.count()  # metadata-cheap on parquet; NOT row data collection
@@ -616,14 +588,14 @@ def q39_similar_pairs(
         )
     a = e.select(
         F.col("vec_id").alias("va"), F.col("embedding").alias("ea"),
-        norm(F.col("embedding")).alias("na"),
+        F.expr(norm_sql("`embedding`")).alias("na"),
         F.col("label").alias("label_a"),
     )
     b = e.select(
         F.col("vec_id").alias("vb"), F.col("embedding").alias("eb"),
-        norm(F.col("embedding")).alias("nb"),
+        F.expr(norm_sql("`embedding`")).alias("nb"),
     )
-    sim = F.round(dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")), 6)
+    sim = F.round(F.expr(dot_sql("`ea`", "`eb`")) / (F.col("na") * F.col("nb")), 6)
     pairs = (
         a.join(F.broadcast(b), F.col("va") < F.col("vb"))
         .select("va", "vb", "label_a", sim.alias("sim"))
@@ -838,7 +810,7 @@ def q39b_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(cands)
         .join(ea, "va")
         .join(eb, "vb")
-        .select("va", "vb", cosine_sim(F.col("ea"), F.col("eb")).alias("sim"))
+        .select("va", "vb", F.expr(cosine_sim_sql("`ea`", "`eb`")).alias("sim"))
         .filter(F.col("sim") >= 0.3)
     )
     m1 = members.select(F.col("rep").alias("va"), F.col("vec_id").alias("ia"))
@@ -858,7 +830,7 @@ def q39b_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     selfsim = (
         dup_reps.join(e2, dup_reps.rep == e2.vec_id)
-        .select("rep", cosine_sim(F.col("emb"), F.col("emb")).alias("sim"))
+        .select("rep", F.expr(cosine_sim_sql("`emb`", "`emb`")).alias("sim"))
         .filter(F.col("sim") >= 0.3)
     )
     within = (

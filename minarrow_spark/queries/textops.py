@@ -8,8 +8,6 @@ in the hot path, embarrassingly parallel at 100 TB.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -22,7 +20,7 @@ from minarrow_spark.functions.text import (
     fingerprint,
     lang_predict,
     quality_score,
-    token_count,
+    token_count_sql,
     tokens,
 )
 from minarrow_spark.queries._util import T, par
@@ -186,7 +184,7 @@ def q30_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = par(T(spark, sf_dir, "documents"))
-    nt = token_count(F.col("text"))
+    nt = F.expr(token_count_sql("`text`"))
     nb = bpe_token_count(F.col("text"))
     g = d.select(
         "lang", lang_predict(F.col("text")).alias("predicted"),
@@ -250,17 +248,7 @@ def q30_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     pick = lambda df: df.select("tier", "ka", "kb", "sval", "val")
-    result = pick(lg).unionByName(pick(mdf)).unionByName(pick(topt))
-    # Opt-in forensics (MINARROW_FORENSICS=1): the bpe_merge tier replays a
-    # 20-iteration driver-side merge loop — per-tier md5s localize any
-    # future driver-only flake to langgrid/merges/encode in one round.
-    from minarrow_spark.forensics import capture
-
-    capture(
-        "q30", result, spark, tier_col="tier",
-        extra={"sf_dir": sf_dir, "merges": _BPE_MERGES},
-    )
-    return result
+    return pick(lg).unionByName(pick(mdf)).unionByName(pick(topt))
 
 
 @query(
@@ -463,9 +451,9 @@ def q32_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # clone-free data, AQE broadcasts when small (the q41 rule).
     grp = members.filter(F.col("doc_id") == F.col("rep")).select("doc_id", "gc")
     dr = d.join(grp, "doc_id")
-    score = quality_score(F.col("text"))
+    score = quality_score("text")
     toks = tokens(F.col("text"))
-    n_tok = token_count(F.col("text")).cast("double")
+    n_tok = F.expr(token_count_sql("`text`")).cast("double")
     ttr = F.when(
         n_tok > 0, F.size(F.array_distinct(toks)).cast("double") / n_tok
     ).otherwise(F.lit(1.0))
@@ -643,7 +631,7 @@ def q32_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("gc")  # members carries the authoritative copy
         .withColumnRenamed("doc_id", "rep")
     )
-    result = (
+    return (
         members.join(metrics, "rep")
         .groupBy("source")
         .agg(
@@ -678,13 +666,6 @@ def q32_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_dup3_heavy"),
         )
     )
-    # Opt-in forensics (MINARROW_FORENSICS=1): q32's NLL tier chains a
-    # transcendental per-value rounding contract — if a driver-only flake
-    # ever hits it, the sidecar localizes which source row diverged.
-    from minarrow_spark.forensics import capture
-
-    capture("q32", result, spark, extra={"sf_dir": sf_dir})
-    return result
 
 
 _Q33_SAMPLE_FRAC = 0.10  # deterministic hash-sample rate (salt "s1")
@@ -1058,14 +1039,10 @@ def q41_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # string AND deletes the per-gram concat_ws allocation in the heavy
     # rep-side shingle pass. Oracle recomputes with strings independently;
     # counts/severity agree under the collapse-key soundness class. The
-    # string form stays runnable as the measured A/B twin
-    # (MINARROW_Q41_GRAMS=str; SCALE.md q41 row).
-    if os.environ.get("MINARROW_Q41_GRAMS") == "str":
-        from minarrow_spark.functions.text import shingles as _grams
-    else:
-        _grams = shingle_hashes
+    # string form is pinned against it in test_semantics_props
+    # (SCALE.md q41 row).
     garr = lambda df: df.select(
-        "doc_id", F.array_distinct(_grams(F.col("text"), 8)).alias("garr")
+        "doc_id", F.array_distinct(shingle_hashes(F.col("text"), 8)).alias("garr")
     )
     bg = garr(bench).select(F.explode("garr").alias("gram")).distinct()
     # n_grams rides every exploded gram row (one long of payload): the
@@ -1175,7 +1152,6 @@ def q42_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     key, so Catalyst reuses the window's hash partitioning: ONE shuffle
     total (pinned in tests/test_plans.py)."""
     from minarrow_spark.functions.arithmetic import floordiv_int_sql as fd
-    from minarrow_spark.functions.text import token_count_sql
 
     B, S = _PACK_BUDGET, _PACK_SHARDS
     d = par(T(spark, sf_dir, "documents"))
@@ -1184,7 +1160,7 @@ def q42_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     # zero-job builder left on the bench-timed path, ~0.35 s of ~85 py4j
     # round-trips per build). Same plan (r11 after-dump diff empty modulo
     # expression ids); the floordiv/token-count contracts stay single-
-    # sourced via their twin-pinned *_sql emitters. Literal-type notes:
+    # sourced in their *_sql emitters. Literal-type notes:
     # bare integer SQL literals are INT like F.lit(n) (only fractional
     # literals flip to DECIMAL — the q10 lesson); the chunk-budget divisor
     # keeps its explicit CAST(512 AS BIGINT) from the Column form.
@@ -1192,7 +1168,7 @@ def q42_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         f"doc_id % {S} AS shard",
         "doc_id",
-        f"{token_count_sql('text')} AS n_tok",
+        f"{token_count_sql('`text`')} AS n_tok",
     )
     c = t.selectExpr(
         "lang",

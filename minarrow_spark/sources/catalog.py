@@ -38,8 +38,6 @@ TABLES: tuple[str, ...] = (
 # Dimension tables small enough to broadcast at any realistic scale factor.
 BROADCAST_TABLES: frozenset[str] = frozenset({"region", "nation", "supplier"})
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # Post-load schema contract (r6 verdict task 7): driver-regenerated testdata
 # has flipped parquet timestamp physical types twice (TIMESTAMP_NANOS →
 # µs-NTZ); load_table normalizes the known variants SILENTLY, so a future
@@ -228,13 +226,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         _check_contract(name, df, table_path(sf_dir, name))
     cache[key] = df
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, suffix: str = "") -> None:
-    """Register every table as a temp view (for the SQL API surface)."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name + suffix)

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from minarrow_spark.operators.similarity import (
-    cosine_sim,
+    cosine_sim_sql,
     dequantize_embeddings,
     quantize_embeddings,
     sign_cell,
@@ -95,7 +95,7 @@ def ann_writer(index_dir: str, out_dir: str, vec_col: str = "embedding", k: int 
             _read_index(spark, index_dir, batch_id), out_col="c_vec"
         ).select("cell", F.col("vec_id").alias("c_id"), "c_vec")
         scored = probes.join(index, "cell").select(
-            "q_id", "c_id", cosine_sim(F.col("q_vec"), F.col("c_vec")).alias("sim")
+            "q_id", "c_id", F.expr(cosine_sim_sql("`q_vec`", "`c_vec`")).alias("sim")
         )
         w = W.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("c_id"))
         topk = (
@@ -203,7 +203,7 @@ def batch_twin(
                     "cell", "b")
         .join(cand, "cell")
         .filter(F.col("cb") < F.col("b"))
-        .select("q_id", "c_id", cosine_sim(F.col("q_vec"), F.col("c_vec")).alias("sim"))
+        .select("q_id", "c_id", F.expr(cosine_sim_sql("`q_vec`", "`c_vec`")).alias("sim"))
     )
     w = W.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("c_id"))
     return (

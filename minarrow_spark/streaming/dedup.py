@@ -191,11 +191,14 @@ def _resolve_width(
         return bits
     if pinned is not None:
         return pinned
-    from minarrow_spark.functions.text import token_count
+    from minarrow_spark._sql import ident
+    from minarrow_spark.functions.text import token_count_sql
 
     stats = batch.agg(
         F.approx_count_distinct(F.md5(F.col(text_col))).alias("n"),
-        F.percentile_approx(token_count(F.col(text_col)), F.lit(0.5)).alias("med"),
+        F.percentile_approx(
+            F.expr(token_count_sql(ident(text_col))), F.lit(0.5)
+        ).alias("med"),
     ).collect()[0]
     bits, _bands = simhash_width_auto(
         int(stats["n"]), float(stats["med"] or 0), collision_budget

@@ -24,7 +24,6 @@ def main() -> int:
     only = set(sys.argv[3:])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    os.environ.setdefault("MINARROW_FORENSICS", "0")
     from minarrow_spark.registry import all_queries
     from minarrow_spark.session import get_spark
 

@@ -26,17 +26,14 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-# Forensics sidecars execute an extra guarded collect inside the query
-# build — diagnostics that must stay OUT of timed windows (bench.py and
-# scale10_probe.py already do this; r7 closed the gap here).
-os.environ.setdefault("MINARROW_FORENSICS", "0")
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO_ROOT)
 
 import bench
 from minarrow_spark.registry import all_queries
 from minarrow_spark.session import get_spark
 
-X100_DIR = "/root/repo/.scratch/bench_x100"
+X100_DIR = os.path.join(_REPO_ROOT, ".scratch", "bench_x100")
 DEFAULT = (
     "q01_pricing_summary",   # salted scaled-long agg over 60M lineitem rows
     "q04_segment_revenue",   # multi-join + partial agg
@@ -92,7 +89,7 @@ def main() -> None:
         # there and −25% here. This mode salts each replica's text with a
         # unique token (documents only, 50×), the regime a real 100 TB
         # crawl is in. Only text-family queries are meaningful against it.
-        data_dir = "/root/repo/.scratch/x100_distinct"
+        data_dir = os.path.join(_REPO_ROOT, ".scratch", "x100_distinct")
         doc_path = os.path.join(data_dir, "documents.parquet")
         if not os.path.exists(os.path.join(data_dir, "_OK")):
             from pyspark.sql import functions as F

@@ -27,7 +27,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-os.environ.setdefault("MINARROW_FORENSICS", "0")
 
 import bench  # noqa: E402
 from minarrow_spark.registry import all_queries  # noqa: E402

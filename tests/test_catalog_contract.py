@@ -85,9 +85,7 @@ def test_par_memo_semantics(spark):
     # repeat builds on the cached catalog df hit the memo (same lazy plan)
     assert par(d) is p1
     # the guard itself still holds: small scan ends up at defaultParallelism
-    assert p1.rdd.getNumPartitions() >= min(
-        spark.sparkContext.defaultParallelism, 1
-    )
+    assert p1.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
     # a DIFFERENT df object (e.g. post-invalidation reload) misses the memo
     # and gets its own entry — no cross-object reuse
     fresh = spark.read.parquet(table_path(SF_SMALL, "nation"))
@@ -95,6 +93,25 @@ def test_par_memo_semantics(spark):
     assert p2 is not p1 and par(fresh) is p2
     # schema/behavior unchanged
     assert p1.columns == d.columns and p2.columns == fresh.columns
+
+
+def test_par_memo_identity_entry_is_collectable(spark):
+    # An input that already has enough partitions comes back unchanged; its
+    # memo entry must not pin it (a value equal to its own weak key would).
+    import gc
+    import weakref
+
+    from minarrow_spark.queries._util import par
+
+    wide = spark.range(
+        0, 64, numPartitions=2 * spark.sparkContext.defaultParallelism
+    )
+    unchanged = par(wide) is wide and par(wide) is wide  # second call: memo hit
+    assert unchanged
+    ref = weakref.ref(wide)
+    del wide
+    gc.collect()
+    assert ref() is None
 
 
 def test_extra_column_is_fine(spark):

@@ -735,7 +735,7 @@ def test_arrow_cosine_matches_hof_cosine(spark, sf_dir):
     non-zero rows)."""
     from pyspark.sql import functions as F
 
-    from minarrow_spark.operators.similarity import cosine_sim, cosine_sim_arrow
+    from minarrow_spark.operators.similarity import cosine_sim_arrow, cosine_sim_sql
 
     emb = (
         spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -748,7 +748,7 @@ def test_arrow_cosine_matches_hof_cosine(spark, sf_dir):
     both = pairs.select(
         "va",
         "vb",
-        cosine_sim(F.col("ea"), F.col("eb")).alias("hof"),
+        F.expr(cosine_sim_sql("`ea`", "`eb`")).alias("hof"),
         cosine_sim_arrow(6)(F.col("ea"), F.col("eb")).alias("arrow"),
     ).collect()
     assert len(both) == 40 * 39 // 2
@@ -759,12 +759,12 @@ def test_arrow_cosine_matches_hof_cosine(spark, sf_dir):
 def test_arrow_cosine_contract_enforced(spark):
     """r5 advisory: cosine_sim_arrow's contract is ENFORCED, not just
     documented — zero-norm rows yield a real SQL NULL (matching
-    cosine_sim's divide-by-zero semantics), and null or ragged embedding
+    cosine_sim_sql's divide-by-zero semantics), and null or ragged embedding
     arrays raise a clear error instead of an opaque np.stack failure."""
     import pytest as _pytest
     from pyspark.sql import functions as F
 
-    from minarrow_spark.operators.similarity import cosine_sim, cosine_sim_arrow
+    from minarrow_spark.operators.similarity import cosine_sim_arrow, cosine_sim_sql
 
     rows = [
         (1, [1.0, 2.0, 3.0], [1.0, 2.0, 3.0]),
@@ -779,7 +779,7 @@ def test_arrow_cosine_contract_enforced(spark):
         for r in df.select(
             "id",
             cosine_sim_arrow(6)(F.col("a"), F.col("b")).alias("arrow"),
-            cosine_sim(F.col("a"), F.col("b")).alias("hof"),
+            F.expr(cosine_sim_sql("`a`", "`b`")).alias("hof"),
         ).collect()
     }
     assert got[1] == (1.0, 1.0)
@@ -1171,8 +1171,11 @@ def test_q37_hashed_grams_cloned_corpus_oracle(spark, sf_dir, tmp_path, monkeypa
     ok, msg = compare(q.fn(spark, clone_dir), duckdb_conn(clone_dir), q.oracle)
     assert ok, msg
 
-    # hashed mode output == string-twin output, row for row
+    # hashed grams output == string-gram reference output, row for row
+    # (q37 imports char_gram_hashes inside its body, so the patch applies)
+    import minarrow_spark.functions.text as text_fns
+
     hashed = {tuple(r) for r in q.fn(spark, clone_dir).collect()}
-    monkeypatch.setenv("MINARROW_Q37_GRAMS", "str")
+    monkeypatch.setattr(text_fns, "char_gram_hashes", text_fns.char_grams)
     stringed = {tuple(r) for r in q.fn(spark, clone_dir).collect()}
     assert hashed == stringed and hashed

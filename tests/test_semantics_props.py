@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from minarrow_spark.functions.arithmetic import (
     floordiv,
-    floordiv_int,
+    floordiv_int_sql,
     remainder,
     try_div,
 )
@@ -74,7 +74,7 @@ def test_int_floordiv_exact_full_range(spark, pairs):
     rows = _eval_pairs(
         spark,
         pairs,
-        ["a", "b", floordiv_int(F.col("a"), F.col("b")).alias("fd")],
+        ["a", "b", F.expr(floordiv_int_sql("`a`", "`b`")).alias("fd")],
     )
     for r in rows:
         if r.b == 0:
@@ -86,18 +86,24 @@ def test_int_floordiv_exact_full_range(spark, pairs):
 @settings(max_examples=25, deadline=None)
 @given(st.lists(st.tuples(BIGINTS, BIGINTS), min_size=1, max_size=50))
 def test_floordiv_sql_twin_matches_column_form(spark, pairs):
-    """floordiv_int_sql (the r11 build-cut SQL emitter) must stay the SAME
-    expression as floordiv_int: value- and type-identical over the signed
-    full range including zero divisors. The contract is single-sourced in
-    functions/arithmetic.py; this pin is what allows bench-timed builders
-    to use the string form."""
-    from minarrow_spark.functions.arithmetic import floordiv_int_sql
+    """floordiv_int_sql (the only body of the exact integer floor-division
+    contract) must stay value- and type-identical to the Column-operator
+    reference below — Spark's truncating `div` adjusted toward −∞ when the
+    remainder is nonzero and the signs differ, NULL on a zero divisor —
+    over the signed full range including zero divisors."""
+
+    def reference(a, b):
+        q = F.call_function("div", a, b)
+        adj = F.when(((a % b) != 0) & ((a < 0) != (b < 0)), F.lit(1)).otherwise(
+            F.lit(0)
+        )
+        return F.when(b == 0, F.lit(None).cast("long")).otherwise(q - adj)
 
     pairs = pairs + [(7, 0), (-7, -2), (7, -2), (-7, 2), (0, 5)]
     df = spark.createDataFrame(pairs, "a long, b long")
     out = df.select(
-        floordiv_int(F.col("a"), F.col("b")).alias("col_form"),
-        F.expr(floordiv_int_sql("a", "b")).alias("sql_form"),
+        reference(F.col("a"), F.col("b")).alias("col_form"),
+        F.expr(floordiv_int_sql("`a`", "`b`")).alias("sql_form"),
     )
     assert [f.dataType.simpleString() for f in out.schema.fields] == ["bigint", "bigint"]
     for r in out.collect():
@@ -105,18 +111,25 @@ def test_floordiv_sql_twin_matches_column_form(spark, pairs):
 
 
 def test_token_count_sql_twin_matches_column_form(spark):
-    """token_count_sql must reproduce token_count byte-for-byte, including
-    the WS pattern string itself: the SQL literal is backslash-escaped so
-    the parser yields the IDENTICAL Java regex bytes (an over-escaped class
+    """token_count_sql must reproduce the Column-operator reference below
+    (trim, '' → 0, else size of the WS split) byte-for-byte, including the
+    WS pattern string itself: the SQL literal is backslash-escaped so the
+    parser yields the IDENTICAL Java regex bytes (an over-escaped class
     would match literal t/n/r/f/backslash characters — caught by the
     hostile rows below; an under-escaped one is regex-equivalent but would
     silently fork the pattern bytes — caught by the round-trip assert)."""
-    from minarrow_spark.functions.text import WS, token_count, token_count_sql
+    from minarrow_spark.functions.text import WS, token_count_sql
 
-    # The pattern literal inside the twin must round-trip through the Spark
-    # SQL parser to the exact WS bytes the Column form passes.
+    def reference(text):
+        t = F.trim(text)
+        return F.when(t == "", F.lit(0)).otherwise(F.size(F.split(t, WS))).cast(
+            "bigint"
+        )
+
+    # The pattern literal inside the emitter must round-trip through the
+    # Spark SQL parser to the exact WS bytes the Column reference passes.
     # quoted segments: [1] is the `= ''` empty-string compare, [3] the pattern
-    ws_lit = token_count_sql("text").split("'")[3]
+    ws_lit = token_count_sql("`text`").split("'")[3]
     assert spark.sql(f"SELECT '{ws_lit}' AS p").first().p == WS
 
     rows = [
@@ -128,8 +141,8 @@ def test_token_count_sql_twin_matches_column_form(spark):
     ]
     df = spark.createDataFrame(rows, "text string")
     out = df.select(
-        token_count(F.col("text")).alias("col_form"),
-        F.expr(f"{token_count_sql('text')}").alias("sql_form"),
+        reference(F.col("text")).alias("col_form"),
+        F.expr(token_count_sql("`text`")).alias("sql_form"),
     )
     assert [f.dataType.simpleString() for f in out.schema.fields] == ["bigint", "bigint"]
     for r in out.collect():
@@ -137,10 +150,21 @@ def test_token_count_sql_twin_matches_column_form(spark):
 
 
 def test_cosine_sim_sql_twin_matches_column_form(spark):
-    """cosine_sim_sql (r11 build-cut emitter) must stay the SAME expression
-    as cosine_sim: value- and type-identical, including the try_divide
-    zero-norm → NULL contract and float→double widening."""
-    from minarrow_spark.operators.similarity import cosine_sim, cosine_sim_sql
+    """cosine_sim_sql (the only body of the cosine contract) must stay
+    value- and type-identical to the Column-operator reference below,
+    including the try_divide zero-norm → NULL contract and float→double
+    widening."""
+    from minarrow_spark.operators.similarity import cosine_sim_sql
+
+    def reference(a, b, digits=6):
+        a, b = a.cast("array<double>"), b.cast("array<double>")
+        dot = F.aggregate(
+            F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
+        )
+        norm = lambda v: F.sqrt(  # noqa: E731
+            F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x)
+        )
+        return F.round(F.try_divide(dot, norm(a) * norm(b)), digits)
 
     rows = [
         (1, [1.0, 2.0, 3.0], [4.0, -5.0, 6.0]),
@@ -151,12 +175,38 @@ def test_cosine_sim_sql_twin_matches_column_form(spark):
     ]
     df = spark.createDataFrame(rows, "id long, a array<float>, b array<float>")
     out = df.select(
-        cosine_sim(F.col("a"), F.col("b")).alias("col_form"),
-        F.expr(cosine_sim_sql("a", "b")).alias("sql_form"),
+        "id",
+        reference(F.col("a"), F.col("b")).alias("col_form"),
+        F.expr(cosine_sim_sql("`a`", "`b`")).alias("sql_form"),
     )
-    assert [f.dataType.simpleString() for f in out.schema.fields] == ["double", "double"]
-    for r in out.collect():
-        assert r.col_form == r.sql_form, r
+    assert [f.dataType.simpleString() for f in out.schema.fields] == [
+        "bigint", "double", "double"
+    ]
+    got = {r.id: r.sql_form for r in out.collect() if r.col_form == r.sql_form}
+    assert len(got) == len(rows), got
+    assert got[2] is None and got[5] is None and got[3] == 1.0 and got[4] == 0.0
+
+
+def test_brute_force_topk_quotes_column_names(spark):
+    """Column names reach cosine_sim_sql backtick-quoted (embedded backticks
+    doubled), so vector/id columns named with a space or a backtick still
+    resolve."""
+    from minarrow_spark.operators.similarity import brute_force_topk
+
+    cands = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [1.0, 1.0])],
+        "vec_id long, `cand vec` array<double>",
+    )
+    probes = spark.createDataFrame([(10, [1.0, 0.1])], "`q id` long, `q``vec` array<double>")
+    out = brute_force_topk(
+        probes, cands, k=2, q_id="q id", q_vec="q`vec", c_id="vec_id", c_vec="cand vec"
+    )
+    assert out.columns == ["q id", "vec_id", "sim", "rank"]
+    got = [(r["vec_id"], r["sim"], r["rank"]) for r in out.orderBy("rank").collect()]
+    norm = math.sqrt(1.01)
+    want = [(1, 1.0 / norm, 1), (3, 1.1 / (norm * math.sqrt(2.0)), 2)]
+    assert [(v, k) for v, _, k in got] == [(v, k) for v, _, k in want]
+    assert all(abs(g[1] - w[1]) < 1e-6 for g, w in zip(got, want)), got
 
 
 @settings(max_examples=25, deadline=None)
@@ -263,14 +313,14 @@ _HOSTILE_WS_DOCS = [
 def test_ws_class_tokenizes_identically_cross_engine(spark):
     import duckdb
 
-    from minarrow_spark.functions.text import WS, fingerprint, token_count
+    from minarrow_spark.functions.text import WS, fingerprint, token_count_sql
 
     df = spark.createDataFrame(_HOSTILE_WS_DOCS, "doc_id long, text string")
     srows = {
         r.doc_id: (r.nt, r.fp)
         for r in df.select(
             "doc_id",
-            token_count(F.col("text")).alias("nt"),
+            F.expr(token_count_sql("`text`")).alias("nt"),
             fingerprint(F.col("text")).alias("fp"),
         ).collect()
     }
@@ -496,7 +546,7 @@ def test_m9_division_matches_duckdb(spark, pairs):
         r.i: (r.fd, r.rem, r.td)
         for r in df.select(
             "i",
-            floordiv_int(F.col("a"), F.col("b")).alias("fd"),
+            F.expr(floordiv_int_sql("`a`", "`b`")).alias("fd"),
             remainder(F.col("a"), F.col("b")).alias("rem"),
             try_div(F.col("a"), F.col("b")).alias("td"),
         ).collect()
