@@ -28,7 +28,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from minarrow_spark.registry import all_queries
-from minarrow_spark.session import get_spark
+from minarrow_spark.session import codegen_compiles, get_spark
 
 # 10x-replica tier ----------------------------------------------------------
 
@@ -268,11 +268,15 @@ def main() -> None:
     calibration_s = calibration(spark)
 
     # Per-query CONSECUTIVE reps (not round-robin over the set): the
-    # steady state being measured is per-query, and interleaving nine
-    # other plans between reps evicts codegen/JIT state — q35 measured
-    # 2.1s round-robin vs ~1.5-1.7s isolated with identical code. A
-    # gc_sweep between queries keeps the previous query's dead checkpoint
-    # blocks out of the next one's timed window.
+    # steady state being measured is per-query. Round-robin once cost q35
+    # 2.1s vs ~1.5-1.7s isolated with identical code: at Spark's default
+    # 100-entry codegen cache the nine plans' ~175 generated classes
+    # evicted each other, so every rep recompiled (plus cold JIT). The
+    # session now sizes the cache to the registry (session.py), and
+    # ``codegen_compiles`` below records each query's compile count over
+    # its timed reps — nonzero means a cache regression or a per-build
+    # literal in the plan. A gc_sweep between queries keeps the previous
+    # query's dead checkpoint blocks out of the next one's timed window.
     #
     # Self-adjudication (r10 verdict task 4, extending the r9 scale10
     # protocol to the headline): BENCH_r09's headline read q01/q04/q10
@@ -286,6 +290,7 @@ def main() -> None:
     times: dict[str, float] = {}
     cals: dict[str, float] = {}
     retries: dict[str, float] = {}
+    compiles: dict[str, int] = {}
 
     def _rep_block(name: str) -> None:
         for _ in range(5):
@@ -306,7 +311,9 @@ def main() -> None:
         gc_sweep(spark)
         cal = calibration(spark, reps=2, warm=0)
         cals[name] = cal
+        c0 = codegen_compiles(spark)
         _rep_block(name)
+        compiles[name] = codegen_compiles(spark) - c0
         # Hot-anchor self-correction (r11, see _hot_anchor): one extra
         # recalibrated best-of-5 block when this query's anchor read
         # >1.5× the session's best anchor — the r10 artifact's q35/q45
@@ -314,7 +321,9 @@ def main() -> None:
         if name not in errors and _hot_anchor(cal, cals, calibration_s):
             gc_sweep(spark)
             retries[name] = calibration(spark, reps=2, warm=0)
+            c0 = codegen_compiles(spark)
             _rep_block(name)
+            compiles[name] += codegen_compiles(spark) - c0
 
     out = {
         "metric": "headline_queries_total",
@@ -328,6 +337,9 @@ def main() -> None:
         "value": round(sum(times.values()), 3) if not errors else None,
         "unit": "sec",
         "queries": times,
+        # generated classes compiled during each query's timed reps; 0 = all
+        # came from the codegen cache
+        "codegen_compiles": compiles,
         "sf": sf,
     }
     if errors:

@@ -26,8 +26,10 @@ from pyspark.sql import functions as F
 
 def with_salt(df: DataFrame, n_salts: int, col_name: str = "__salt") -> DataFrame:
     """Uniform random salt in [0, n_salts). Salt only routes rows between
-    reducers — results never depend on its value, so nondeterminism is safe."""
-    return df.withColumn(col_name, (F.rand() * n_salts).cast("int"))
+    reducers — results never depend on its value. The seed is FIXED: an
+    unseeded ``rand()`` puts a fresh seed literal into the generated code on
+    every build, so each run of the same plan compiles new classes."""
+    return df.withColumn(col_name, (F.rand(0) * n_salts).cast("int"))
 
 
 def salted_agg(

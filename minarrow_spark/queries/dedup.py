@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 
 from minarrow_spark.operators.dedup import (
     augment_with_near_dups,
-    doc_shingle_arrays,
     exact_dedup,
     minhash_lsh_jaccard,
 )

@@ -14,8 +14,6 @@ from pyspark.sql import functions as F
 
 from minarrow_spark.functions.arithmetic import (
     dec,
-    exact_avg,
-    exact_var_samp,
     floordiv,
     floordiv_int_sql,
     remainder,

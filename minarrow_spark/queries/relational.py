@@ -71,7 +71,10 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     final level widens to DECIMAL(38,0) before the unbounded merge, scaling
     back to currency units. Results are bit-identical to the decimal form
     in ANY partitioning (integer sums are exact and commutative); the salt
-    only routes rows, so rand() is safe. The extra stage shuffles
+    only routes rows, so any salt value is safe. The salt is SEEDED
+    (`rand(0)`): an unseeded `rand()` bakes a fresh seed literal into the
+    generated code on every build, so every run recompiled its stages and
+    churned them through Spark's codegen cache. The extra stage shuffles
     6×1024 partial rows — noise."""
     # Expressions as SQL STRINGS (r10 opt — the r8 q36 build-cut pattern),
     # upgraded r11 to ONE spark.sql call with {l} DataFrame substitution:
@@ -100,7 +103,7 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
                  sum(disc_bp) AS disc_bp, count(1) AS n
           FROM (
             SELECT l_returnflag, l_linestatus,
-                   CAST(rand() * 1024 AS INT) AS __salt,
+                   CAST(rand(0) * 1024 AS INT) AS __salt,
                    CAST(round(l_quantity * 100) AS BIGINT) AS qty_c,
                    CAST(round(l_extendedprice * 100) AS BIGINT) AS price_c,
                    CAST(round(l_extendedprice * 100) AS BIGINT)

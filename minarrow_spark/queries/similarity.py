@@ -595,7 +595,9 @@ def q39_similar_pairs(
         F.col("vec_id").alias("vb"), F.col("embedding").alias("eb"),
         F.expr(norm_sql("`embedding`")).alias("nb"),
     )
-    sim = F.round(F.expr(dot_sql("`ea`", "`eb`")) / (F.col("na") * F.col("nb")), 6)
+    # try_divide, as in cosine_sim_sql: a zero-norm vector yields NULL
+    # instead of failing the whole query with DIVIDE_BY_ZERO under ANSI.
+    sim = F.round(F.try_divide(F.expr(dot_sql("`ea`", "`eb`")), F.col("na") * F.col("nb")), 6)
     pairs = (
         a.join(F.broadcast(b), F.col("va") < F.col("vb"))
         .select("va", "vb", "label_a", sim.alias("sim"))

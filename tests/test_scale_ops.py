@@ -799,6 +799,40 @@ def test_arrow_cosine_contract_enforced(spark):
         nullarr.select(cosine_sim_arrow(6)(F.col("a"), F.col("b"))).collect()
 
 
+def test_q39_zero_norm_embedding_yields_null_under_ansi(spark, tmp_path):
+    """q39's pair similarity keeps cosine_sim_sql's try_divide contract: a
+    zero-norm embedding gives its pairs a NULL sim under ANSI (where a plain
+    `/ 0.0` fails the whole query with DIVIDE_BY_ZERO), and the other pairs
+    keep their values."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from minarrow_spark.registry import all_queries
+
+    corpus = str(tmp_path / "zero_norm")
+    os.makedirs(corpus)
+    pq.write_table(
+        pa.table({
+            "vec_id": pa.array([1, 2, 3], pa.int64()),
+            "embedding": pa.array(
+                [[1.0, 0.0], [0.0, 0.0], [1.0, 1.0]], pa.list_(pa.float32())
+            ),
+            "label": pa.array([0, 1, 0], pa.int32()),
+        }),
+        f"{corpus}/embeddings.parquet",
+    )
+    old = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        rows = all_queries()["q39_similar_pairs"].fn(spark, corpus).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", old)
+    got = {(r.va, r.vb): r.sim for r in rows}
+    assert got == {(1, 3): round(2 ** -0.5, 6), (1, 2): None, (2, 3): None}
+
+
 def test_simhash_width_auto_rule():
     """Decision rule pinned to the SCALE.md record: upgrade to 64/4x16
     needs BOTH large distinct-N (collision budget exceeded at 1024

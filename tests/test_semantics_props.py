@@ -642,8 +642,6 @@ def test_datetime_semantics_match_duckdb(spark, rows):
     import duckdb
 
     from minarrow_spark.functions.datetimes import (
-        add_days,
-        add_months_,
         date_str,
         is_leap_year,
         iso_dow,
