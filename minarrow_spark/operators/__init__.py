@@ -8,12 +8,10 @@ from minarrow_spark.operators.dedup import (
     augment_with_near_dups,
     doc_shingle_arrays,
     exact_dedup,
-    jaccard_pairs,
     jaccard_pairs_arr,
     lsh_candidates,
     minhash_lsh_jaccard,
     minhash_signatures,
-    simhash16,
 )
 from minarrow_spark.operators.clustering import (
     cluster_balanced_sample,
@@ -32,8 +30,8 @@ from minarrow_spark.operators.similarity import (
 
 __all__ = [
     "augment_with_near_dups", "doc_shingle_arrays",
-    "exact_dedup", "jaccard_pairs", "jaccard_pairs_arr", "lsh_candidates",
-    "minhash_lsh_jaccard", "minhash_signatures", "simhash16", "asof_join",
+    "exact_dedup", "jaccard_pairs_arr", "lsh_candidates",
+    "minhash_lsh_jaccard", "minhash_signatures", "asof_join",
     "brute_force_topk", "dequantize_embeddings", "quantize_embeddings", "hash_sample", "sample_mask",
     "stratified_hash_sample", "train_test_split",
     "cosine_sim_sql", "connected_components", "dedup_clusters",

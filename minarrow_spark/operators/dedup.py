@@ -21,7 +21,7 @@ string ops. Band keys are md5 over concatenated signature slices.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from minarrow_spark.functions.text import shingles, tokens
@@ -70,79 +70,118 @@ def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
 # minhash + LSH
 # --------------------------------------------------------------------------
 
+# One fixed MinHash/LSH configuration for every tier (q35's fused operator,
+# the composable pieces, q34's streaming dedup): word 3-gram shingles, 8
+# minhashes of 16 bits each, 4 bands of 2 hashes. Each salted md5 is sliced
+# into PER_MD5 fixed-width hex windows, so the whole 8-hash signature costs
+# ONE md5 per shingle (the 32-bit packing costs two — measured ~25% slower
+# end-to-end at sf0.1). Minhash width only moves the candidate
+# false-positive rate; the exact-jaccard verify decides output values, so
+# the narrow slices are pure throughput. The DuckDB oracle reproduces the
+# hash as min(substr(md5(salt||shingle), HEX_WIDTH*k+1, HEX_WIDTH)).
+K = 3
+NUM_HASHES = 8
+BAND_SIZE = 2
+HASH_BITS = 16
+PER_MD5 = 128 // HASH_BITS  # sub-hashes per md5 digest
+HEX_WIDTH = HASH_BITS // 4  # hex chars per sub-hash
+N_MD5 = -(-NUM_HASHES // PER_MD5)  # digests per shingle (ceil)
+N_BANDS = NUM_HASHES // BAND_SIZE
 
-def doc_shingle_arrays(docs: DataFrame, k: int = 3) -> DataFrame:
-    """Per-doc distinct shingle arrays: (doc_id, sh_arr). The zero-shuffle
-    representation — everything derivable per-row stays per-row."""
-    return docs.select(
-        "doc_id", F.array_distinct(shingles(F.col("text"), k)).alias("sh_arr")
+
+def _signature(sh: DataFrame, group_key: list[str], *extra: Column) -> DataFrame:
+    """MinHash signature (h0..h7) per ``group_key`` from exploded
+    (keys…, shingle) rows, plus any ``extra`` aggregates.
+
+    Physical shape (deliberately explode → groupBy, not per-row HOF
+    arrays): md5 + substring over the exploded rows stay inside whole-stage
+    codegen, and the groupBy is map-side combined — 8 partial minima per
+    group cross the wire, not shingle data. Higher-order lambdas evaluate
+    interpreted: the HOF form (``minhash_signatures``) measured ~1.6×
+    slower at sf0.1 and cost q34's stream tier 22 s at the 10× point.
+    Groups with no shingles have no rows here."""
+    keys = [c for c in sh.columns if c != "shingle"]
+    src = sh.select(
+        *keys,
+        *[
+            F.md5(F.concat(F.lit(f"{i}|"), F.col("shingle"))).alias(f"m{i}")
+            for i in range(N_MD5)
+        ],
+    )
+    return src.groupBy(*group_key).agg(
+        *extra,
+        *[
+            F.min(
+                F.substring(
+                    F.col(f"m{i // PER_MD5}"), 1 + HEX_WIDTH * (i % PER_MD5), HEX_WIDTH
+                )
+            ).alias(f"h{i}")
+            for i in range(NUM_HASHES)
+        ],
     )
 
 
-def minhash_signatures(
-    dsa: DataFrame, num_hashes: int = 8, hash_bits: int = 16
-) -> DataFrame:
-    """Minhash signature per doc (composable per-row form): slice each salted
-    md5 into ``128 // hash_bits`` fixed-width hex windows; h_i is the min
-    over shingles of its window of md5(salt_i || '|' || shingle).
+def _band_keys() -> Column:
+    """array<struct<band_id, band_key>> over a signature row: band b's key
+    is md5(h_{2b} || h_{2b+1}). A null signature gives null band keys, so
+    shingle-less docs never collide."""
+    return F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band_id"),
+                F.md5(
+                    F.concat(*[F.col(f"h{b * BAND_SIZE + j}") for j in range(BAND_SIZE)])
+                ).alias("band_key"),
+            )
+            for b in range(N_BANDS)
+        ]
+    )
 
-    Lexicographic min over fixed-width md5-hex slices = a uniform
-    ``hash_bits``-bit minhash (hex order is byte order). The default 16-bit
-    slices pack a whole 8-hash signature into ONE md5 pass per shingle —
-    half the hashing of the 32-bit packing, and minhash width only affects
-    candidate false-positive rate (the exact-jaccard verify stage decides
-    output values), so narrower is strictly a throughput lever here. The
-    hash DEFINITION is identical to the fused ``minhash_lsh_jaccard``
-    pipeline (equivalence pinned in tests/test_scale_ops.py), so the
-    composable pieces and the fused operator are interchangeable. Computed
-    per-row from the shingle array (array_min ∘ transform): ZERO shuffles
-    for any signature width — but higher-order lambdas evaluate
-    interpreted, so the fused operator's explode→map-side-combined-groupBy
-    form is the faster hot path (see its docstring). Docs with no shingles
-    yield null signatures and drop out of banding naturally."""
-    if hash_bits % 4 != 0 or not 4 <= hash_bits <= 128:
-        raise ValueError("hash_bits must be a multiple of 4 in [4, 128]")
-    per_md5 = 128 // hash_bits
-    width = hash_bits // 4
+
+def doc_shingle_arrays(docs: DataFrame) -> DataFrame:
+    """Per-doc distinct shingle arrays: (doc_id, sh_arr). The zero-shuffle
+    representation — everything derivable per-row stays per-row."""
+    return docs.select(
+        "doc_id", F.array_distinct(shingles(F.col("text"), K)).alias("sh_arr")
+    )
+
+
+def minhash_signatures(dsa: DataFrame) -> DataFrame:
+    """Minhash signature per doc in the per-row HOF form (array_min ∘
+    transform over the shingle array): h_i is the min over shingles of
+    window i of md5(salt || '|' || shingle). Zero shuffles, but the lambdas
+    evaluate interpreted, so the hot paths use ``_signature`` instead. This
+    independent form is the reference the tests pin ``_signature`` to.
+    Lexicographic min over fixed-width md5-hex slices is a uniform 16-bit
+    minhash (hex order is byte order). Docs with no shingles yield null
+    signatures and drop out of banding."""
 
     def sliced(i: int):
         # NB: must be a 1-arg lambda — F.transform passes (element, index)
         # to 2-arg callables, which would corrupt the salt.
-        prefix = f"{i // per_md5}|"
-        pos = 1 + width * (i % per_md5)
+        prefix = f"{i // PER_MD5}|"
+        pos = 1 + HEX_WIDTH * (i % PER_MD5)
         return lambda s: F.substring(
-            F.md5(F.concat(F.lit(prefix), s)), pos, width
+            F.md5(F.concat(F.lit(prefix), s)), pos, HEX_WIDTH
         )
 
     return dsa.select(
         "doc_id",
         *[
             F.array_min(F.transform(F.col("sh_arr"), sliced(i))).alias(f"h{i}")
-            for i in range(num_hashes)
+            for i in range(NUM_HASHES)
         ],
     )
 
 
-def lsh_candidates(sig: DataFrame, num_hashes: int = 8, band_size: int = 2) -> DataFrame:
-    """Banded LSH: band key = md5(h_j || … || h_{j+r-1}); docs sharing any
-    band key become candidate pairs (da < db).
+def lsh_candidates(sig: DataFrame) -> DataFrame:
+    """Banded LSH: docs sharing any band key become candidate pairs
+    (da < db).
 
     Scale shape: explode to (band_id, band_key, doc_id), self-join on the
     band key — work is Σ bucket² which LSH keeps small; skewed buckets are
     handled by AQE skew-join."""
-    n_bands = num_hashes // band_size
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.md5(
-                    F.concat(*[F.col(f"h{b * band_size + j}") for j in range(band_size)])
-                ).alias("band_key"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    exploded = sig.select("doc_id", F.explode(bands).alias("b")).select(
+    exploded = sig.select("doc_id", F.explode(_band_keys()).alias("b")).select(
         "doc_id", F.col("b.band_id").alias("band_id"), F.col("b.band_key").alias("band_key")
     )
     a = exploded.alias("a")
@@ -159,120 +198,59 @@ def lsh_candidates(sig: DataFrame, num_hashes: int = 8, band_size: int = 2) -> D
     )
 
 
-def minhash_lsh_jaccard(
-    docs: DataFrame,
-    k: int = 3,
-    num_hashes: int = 8,
-    band_size: int = 2,
-    hash_bits: int = 16,
-    materialize: str = "eager",
-    collapse_exact: bool = True,
-) -> DataFrame:
+def minhash_lsh_jaccard(docs: DataFrame) -> DataFrame:
     """Fused minhash → banded LSH → exact-jaccard pipeline: (da, db, jaccard)
-    for every candidate pair. No persist()/unpersist() lifecycle: the one
-    intermediate materialization is a GC-scoped localCheckpoint (see inline
-    note), so the round-1 session-lifetime cache leak is structurally gone.
+    for every candidate pair, equal to ``minhash_signatures`` →
+    ``lsh_candidates`` → ``jaccard_pairs_arr`` (pinned in
+    tests/test_scale_ops.py). No persist()/unpersist() lifecycle: the
+    intermediate materializations are GC-scoped localCheckpoints.
 
-    Hash scheme: each salted md5 pass is sliced into ``128 // hash_bits``
-    fixed-width hex sub-hashes, so the default 8×16-bit signature costs ONE
-    md5 per shingle (the 32-bit packing costs two — measured ~25% slower
-    end-to-end at sf0.1). Minhash width only moves the candidate
-    false-positive rate; the exact-jaccard verify stage computes the output
-    values, so narrower slices trade a few extra verified-then-rejected
-    candidates for half the hashing. Identically reproducible in the DuckDB
-    oracle as min(substr(md5(salt||shingle), width*k+1, width)).
+    Exact-duplicate collapse (the production "exact-dedup before
+    near-dedup" pattern): pair work inside an LSH bucket is quadratic in
+    bucket size, and a c-way exact-duplicate cluster (boilerplate pages,
+    mirrored shards) puts c identical signatures in EVERY band bucket — c²
+    candidate pairs, each paying the full shingle-intersection verify. So
+    the signature aggregate keys on an exact text fingerprint and each
+    distinct text enters banding and verification once. The full pair list
+    is rebuilt from slim (doc_id, rep) member rows: within-group pairs are
+    jaccard 1.0 (identical text ⇒ identical shingle set), cross-group pairs
+    inherit their representatives' verified jaccard (identical sets ⇒
+    identical intersections), so the expansion is exact. Measured on the
+    100× key-shifted replica corpus (5M docs, every doc in a 100-way clone
+    cluster — scripts/scale100.py): 114 s uncollapsed → see SCALE.md.
 
-    Physical shape (deliberately explode→groupBy, not per-row HOF arrays):
-    md5 + substring over exploded (doc, shingle) rows stay inside
-    whole-stage codegen, and the signature groupBy is map-side combined — 8
-    partial minima per doc cross the wire, not shingle data. Measured ~1.6×
-    faster than the HOF-per-row formulation at sf0.1 (higher-order lambdas
-    evaluate interpreted, outside codegen). Band keys explode from the
-    signature row (tiny); the band self-join carries (doc_id, band_id,
-    band_key) only. For the exact jaccard verify the candidate pairs are
-    broadcast into the two shingle-array attach joins, so the corpus-sized
-    array table streams through with NO shuffle and NO cache (no persist
-    lifecycle; recomputing the array projection is a pushed-down column
-    scan plus per-row split/slice — a cluster job MAY persist the shingle
-    table as an optional lever, the operator itself stays stateless).
-    Jaccard is per-row array math on candidates only. No all-pairs product
-    anywhere; skewed band buckets fall to AQE skew-join; if candidates
-    outgrow the broadcast threshold Spark falls back to a shuffle join.
-    (Candidates deliberately appear ONCE in the tree — a pre-filter of docs
-    by candidate ids was measured slower because the whole signature
-    pipeline re-executes per extra reference.)
+    Physical shape: ``_signature``'s explode → map-side-combined groupBy;
+    band keys explode from the (tiny) signature rows and the band self-join
+    carries (rep, band_id, band_key) only. The candidate pairs broadcast
+    into the two shingle-array attach joins, so the corpus-sized array
+    table streams through with NO shuffle. Jaccard is per-row array math on
+    candidates only; skewed band buckets fall to AQE skew-join; candidates
+    past the broadcast threshold fall back to a shuffle join. (Candidates
+    deliberately appear ONCE in the tree — a pre-filter of docs by
+    candidate ids was measured slower because the whole signature pipeline
+    re-executes per extra reference.)
 
-    Measured at sf0.1 (noop-sink materialization): ~1.4s (16-bit slices,
-    eager checkpoint) vs 2.1s (32-bit) vs 3.1s for the round-1
+    Measured at sf0.1 (noop-sink materialization): ~1.4 s (16-bit slices,
+    eager checkpoint) vs 2.1 s (32-bit) vs 3.1 s for the round-1
     persist+attach-join formulation.
 
-    ``collapse_exact`` (default on) is the dense-duplication guard — the
-    production "exact-dedup before near-dedup" pattern: pair-candidate
-    work inside an LSH bucket is quadratic in bucket size, and a c-way
-    exact-duplicate cluster (boilerplate pages, mirrored shards) puts c
-    identical signatures in EVERY band bucket — c² candidate pairs, each
-    paying the full shingle-intersection verify. Collapsed, the signature
-    aggregate keys on an exact text fingerprint (md5 of the raw text, a
-    per-row projection on a pruned scan — see the inline note for why
-    text-fp over shingle-set-fp), so each distinct text enters banding
-    and verification exactly once; the full pair list is reconstructed
-    afterwards from slim (doc_id, fp) member rows — within-group pairs
-    are jaccard 1.0 by construction (identical text ⇒ identical shingle
-    set), cross-group pairs inherit their representatives' verified
-    jaccard (identical sets
-    ⇒ identical intersections, so the expansion is exact, not
-    approximate). Output rows are unchanged bit-for-bit; only the work to
-    produce them stops being quadratic in clone count. Measured on the
-    100× key-shifted replica corpus (5M docs, every doc in a 100-way
-    clone cluster — scripts/scale100.py): 114 s uncollapsed → see
-    SCALE.md for the collapsed number.
-
     (A runtime clone-detection gate — skip collapse when
-    count_distinct(fp) == count — was tried for the r4 bench regression
-    and rejected by measurement: the driver testdata itself carries exact
-    shingle-set clones even at sf0.1 (5500 non-empty docs, 5492 distinct
-    sets), so the gate never fires on real corpora and its agg job is
-    pure overhead. The regression fix is structural instead — see the
-    materialization-orchestration note in the body: text-keyed fp on a
-    pruned scan, concurrent members job, lazy-dsa-in-eager-sig fusion.)"""
-    if hash_bits % 4 != 0 or not 4 <= hash_bits <= 128:
-        raise ValueError("hash_bits must be a multiple of 4 in [4, 128]")
-    if num_hashes % band_size != 0:
-        raise ValueError("band_size must divide num_hashes")
-    if materialize not in ("lazy", "eager", "none"):
-        raise ValueError("materialize must be 'lazy', 'eager', or 'none'")
-    per_md5 = 128 // hash_bits
-    width = hash_bits // 4
-    n_md5 = -(-num_hashes // per_md5)  # ceil
-    n_bands = num_hashes // band_size
+    count_distinct(fp) == count — was measured and rejected: the driver
+    testdata itself carries exact shingle-set clones even at sf0.1 (5500
+    non-empty docs, 5492 distinct sets), so the gate never fires on real
+    corpora and its agg job is pure overhead.)"""
+    from concurrent.futures import ThreadPoolExecutor
 
-    # The shingle-array table feeds three branches (signature explode + both
-    # jaccard attaches). localCheckpoint materializes it ONCE with a
-    # GC-scoped lifecycle: unlike persist() (whose cache entry lives until
-    # an explicit unpersist — the round-1 leak), checkpoint blocks are freed
-    # by the ContextCleaner as soon as the query's RDDs are garbage
-    # collected, so a long-lived session running the full registry does not
-    # accumulate cached partitions. Trade-off: truncated lineage (an
-    # executor loss during the query forces a rerun) — the standard price
-    # of any materialization, stated here rather than hidden.
-    # ``materialize``: "eager" (default) runs a blocking checkpoint job up
-    # front; "lazy" materializes inside the first consuming job but lets
-    # concurrent first-touching stages duplicate partition compute (measured
-    # at sf0.1: eager 1.4s tight, lazy 1.6-2.3s bimodal — the race is real);
-    # "none" recomputes the text pipeline per branch (~1.9s, the stateless
-    # fallback when checkpoint storage is unavailable).
-    # Exact-clone fingerprint: md5 of the RAW text (trivially injective).
-    # Identical text ⇒ identical token stream ⇒ identical shingle set ⇒
-    # identical signature, bands, and pairwise jaccard against ANY third
-    # document — so text-fp is a SOUND collapse key (finer than the
-    # r4 shingle-set fp: set-identical-but-text-different docs no longer
-    # collapse, which costs only a little extra band work, never
-    # correctness). The win: the fp is computable on a column-pruned
-    # (doc_id, text) scan BEFORE shingling, so the members table never
-    # touches the array-carrying checkpoint (deserializing full-width
-    # sh_arr rows for a slim window was the r4 bench regression). Carried
-    # as TWO longs (120 bits of the md5): long-pair grouping keys stay in
-    # codegen's fast path where 32-byte strings don't.
+    # Exact-clone fingerprint: md5 of the RAW text. Identical text ⇒
+    # identical shingle set ⇒ identical signature, bands and jaccard
+    # against ANY third doc, so it is a SOUND collapse key (finer than a
+    # shingle-set fp, which costs a little extra band work, never
+    # correctness). It is computable on a column-pruned (doc_id, text) scan
+    # BEFORE shingling, so the members table never touches the
+    # array-carrying checkpoint (deserializing full-width sh_arr rows for a
+    # slim window was the r4 bench regression). Carried as TWO longs (120
+    # bits of the md5): long-pair grouping keys stay in codegen's fast path
+    # where 32-byte strings don't.
     def _fp_cols() -> list[Column]:
         fpm = F.md5(F.col("text"))
         return [
@@ -280,116 +258,58 @@ def minhash_lsh_jaccard(
             F.conv(F.substring(fpm, 16, 15), 16, 10).cast("long").alias("fp2"),
         ]
 
-    if collapse_exact:
-        dsa = docs.select(
-            "doc_id",
-            *_fp_cols(),
-            F.array_distinct(shingles(F.col("text"), k)).alias("sh_arr"),
-        )
-    else:
-        dsa = doc_shingle_arrays(docs, k=k)
-
-    group_key = ["fp1", "fp2"] if collapse_exact else ["doc_id"]
-    keys = ["fp1", "fp2", "doc_id"] if collapse_exact else ["doc_id"]
-
-    def _sig_from(d: DataFrame) -> DataFrame:
-        # Keyed on the text fingerprint, clone groups combine MAP-SIDE: one
-        # signature (and its min-doc representative) crosses the wire per
-        # distinct text, no matter how many copies exist. The rep id is
-        # itself a unique group key, so everything downstream is id-keyed.
-        sh = d.select(*keys, F.explode("sh_arr").alias("shingle"))
-        src = sh.select(
-            *keys,
-            *[
-                F.md5(F.concat(F.lit(f"{i}|"), F.col("shingle"))).alias(f"m{i}")
-                for i in range(n_md5)
-            ],
-        )
-        return src.groupBy(*group_key).agg(
-            F.min("doc_id").alias("rep"),
-            *[
-                F.min(
-                    F.substring(
-                        F.col(f"m{i // per_md5}"), 1 + width * (i % per_md5), width
-                    )
-                ).alias(f"h{i}")
-                for i in range(num_hashes)
-            ],
-        )
-
-    # Members table (collapse only): doc_id → group representative, derived
-    # from the SOURCE on a pruned (doc_id, text) scan — never from the
-    # array-carrying checkpoint (deserializing full-width sh_arr rows for a
-    # slim window was the r4 bench regression; the text-fp key makes the
-    # pruned derivation possible). The tokens>=k filter is the slim
-    # equivalent of size(sh_arr)>0, so members covers exactly the docs
-    # that reach the signature stage.
-    members = None
-    if collapse_exact:
-        from pyspark.sql import Window as _W
-
-        members = (
-            docs.filter(F.size(tokens(F.col("text"))) >= k)
-            .select("doc_id", *_fp_cols())
-            .withColumn("rep", F.min("doc_id").over(_W.partitionBy("fp1", "fp2")))
-            .select("doc_id", "rep")
-        )
-
-    # Materialization orchestration. Three facts drive the shape:
-    # (1) AQE's runtime exchange reuse shares only the SHUFFLE — each
-    #     consumer re-runs everything above the reused exchange (final
-    #     aggregate, window) and exchange-free subtrees (dsa's
-    #     scan→project) share nothing — so the multiply-consumed stages
-    #     are explicitly materialized: dsa (sig + both jaccard attaches),
-    #     sig (both band sides), members (ma, mb, within ×2). Measured:
-    #     explicit sig checkpoint 1.50s vs runtime-reuse-only 1.62s at
-    #     sf0.1;
-    # (2) each blocking checkpoint job carries ~0.3s of fixed scheduling
-    #     cost on this host, so job boundaries are the scarce resource
-    #     (measured: the three checkpoints dwarf the 0.4s main job);
-    # (3) Spark job submission is thread-safe, so INDEPENDENT checkpoint
-    #     jobs can run concurrently — members depends only on the source,
-    #     never on dsa/sig, so its job overlaps the dsa→sig chain and the
-    #     wall-clock cost of the third materialization disappears.
-    # In eager mode dsa is LAZY-checkpointed and the eager sig job is its
-    # single, provably-sequential first toucher (the blocking sig
-    # checkpoint completes before any attach branch can read dsa; the
-    # concurrent members job never touches dsa) — so one job materializes
-    # both, saving a whole job boundary. This is the lazy-checkpoint
-    # safety rule's allowed case (cf. q41), not the concurrent-first-touch
-    # race that forces eager dsa in "lazy" mode.
-    if materialize == "eager":
-        dsa = dsa.localCheckpoint(eager=False)
-        if members is not None:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(1) as pool:
-                fut = pool.submit(
-                    lambda df=members: df.localCheckpoint(eager=True)
-                )
-                sig = _sig_from(dsa).localCheckpoint(eager=True)
-                members = fut.result()
-        else:
-            sig = _sig_from(dsa).localCheckpoint(eager=True)
-    elif materialize == "lazy":
-        dsa = dsa.localCheckpoint(eager=False)
-        sig = _sig_from(dsa).localCheckpoint(eager=False)
-        if members is not None:
-            members = members.localCheckpoint(eager=False)
-    else:  # "none": stateless — every consumer recomputes its input
-        sig = _sig_from(dsa)
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.md5(
-                    F.concat(*[F.col(f"h{b * band_size + j}") for j in range(band_size)])
-                ).alias("band_key"),
-            )
-            for b in range(n_bands)
-        ]
+    dsa = docs.select(
+        "doc_id",
+        *_fp_cols(),
+        F.array_distinct(shingles(F.col("text"), K)).alias("sh_arr"),
     )
-    bandrows = sig.select("rep", F.explode(bands).alias("bb")).select(
+    # Members: doc_id → group representative, from the SOURCE on a pruned
+    # (doc_id, text) scan. The tokens>=K filter is the slim equivalent of
+    # size(sh_arr)>0, so members covers exactly the docs that reach the
+    # signature stage.
+    members = (
+        docs.filter(F.size(tokens(F.col("text"))) >= K)
+        .select("doc_id", *_fp_cols())
+        .withColumn("rep", F.min("doc_id").over(Window.partitionBy("fp1", "fp2")))
+        .select("doc_id", "rep")
+    )
+
+    # Materialization orchestration. localCheckpoint blocks are freed by
+    # the ContextCleaner once the query's RDDs are garbage collected, unlike
+    # persist() (the round-1 session-lifetime cache leak); the price is
+    # truncated lineage (an executor loss reruns the query). Three facts
+    # drive the shape:
+    # (1) AQE's runtime exchange reuse shares only the SHUFFLE — each
+    #     consumer re-runs everything above the reused exchange, and
+    #     exchange-free subtrees (dsa's scan→project) share nothing — so the
+    #     multiply-consumed stages are materialized: dsa (sig + both jaccard
+    #     attaches), sig (both band sides), members (ma, mb, within ×2).
+    #     Measured: explicit sig checkpoint 1.50 s vs runtime-reuse-only
+    #     1.62 s at sf0.1;
+    # (2) each blocking checkpoint job carries ~0.3 s of fixed scheduling
+    #     cost, so job boundaries are the scarce resource;
+    # (3) Spark job submission is thread-safe, so the members job (which
+    #     depends only on the source) runs concurrently with the dsa → sig
+    #     chain.
+    # dsa is LAZY-checkpointed and the eager sig job is its single,
+    # sequential first toucher (the blocking sig checkpoint completes
+    # before any attach branch reads dsa; the members job never touches
+    # it), so one job materializes both. Eager beats the alternatives,
+    # measured at sf0.1: eager 1.4 s; lazy checkpoints 1.6–2.3 s bimodal
+    # (concurrent first-touching stages duplicate partition compute); no
+    # checkpoints ~1.9 s (every consumer recomputes the text pipeline).
+    dsa = dsa.localCheckpoint(eager=False)
+    # Keyed on the text fingerprint, clone groups combine MAP-SIDE: one
+    # signature (and its min-doc representative) crosses the wire per
+    # distinct text. The rep id is itself a unique group key, so everything
+    # downstream is id-keyed.
+    sh = dsa.select("fp1", "fp2", "doc_id", F.explode("sh_arr").alias("shingle"))
+    with ThreadPoolExecutor(1) as pool:
+        fut = pool.submit(lambda df=members: df.localCheckpoint(eager=True))
+        sig = _signature(sh, ["fp1", "fp2"], F.min("doc_id").alias("rep"))
+        sig = sig.localCheckpoint(eager=True)
+        members = fut.result()
+    bandrows = sig.select("rep", F.explode(_band_keys()).alias("bb")).select(
         "rep", "bb.band_id", "bb.band_key"
     )
     a = bandrows.select(F.col("rep").alias("da"), "band_id", "band_key")
@@ -415,11 +335,8 @@ def minhash_lsh_jaccard(
         .join(arr_b, "db")
         .select("da", "db", jac.alias("jaccard"))
     )
-    if not collapse_exact:
-        return rep_pairs
 
-    # Expansion back to the full pair list, from the slim (doc_id, rep)
-    # members rows materialized up front (concurrently with dsa/sig).
+    # Expansion back to the full pair list from the slim members rows.
     ma = members.select(F.col("rep").alias("da"), F.col("doc_id").alias("ia"))
     mb = members.select(F.col("rep").alias("db"), F.col("doc_id").alias("ib"))
     cross = (
@@ -445,42 +362,10 @@ def minhash_lsh_jaccard(
     return cross.unionByName(within)
 
 
-def jaccard_pairs(cands: DataFrame, sh: DataFrame) -> DataFrame:
-    """Exact jaccard for candidate pairs from the (doc_id, shingle) table:
-    |A∩B| via a shingle equi-join, |A∪B| = |A|+|B|−|A∩B|. All shuffles are
-    on doc/shingle keys — no array materialization per doc needed at scale."""
-    cnt = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    sa = sh.select(F.col("doc_id").alias("da"), "shingle")
-    sb = sh.select(F.col("doc_id").alias("db"), "shingle")
-    inter = (
-        cands.join(sa, "da")
-        .join(sb, ["db", "shingle"])
-        .groupBy("da", "db")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    ca = cnt.select(F.col("doc_id").alias("da"), F.col("n_sh").alias("ca"))
-    cb = cnt.select(F.col("doc_id").alias("db"), F.col("n_sh").alias("cb"))
-    return (
-        cands.join(inter, ["da", "db"], "left")
-        .join(ca, "da")
-        .join(cb, "db")
-        .select(
-            "da",
-            "db",
-            F.round(
-                F.coalesce(F.col("n_inter"), F.lit(0)).cast("double")
-                / (F.col("ca") + F.col("cb") - F.coalesce(F.col("n_inter"), F.lit(0))),
-                6,
-            ).alias("jaccard"),
-        )
-    )
-
-
 def jaccard_pairs_arr(cands: DataFrame, dsa: DataFrame) -> DataFrame:
     """Exact jaccard for candidate pairs from per-doc shingle *arrays*:
-    two equi-joins to attach the arrays, then per-row array_intersect.
-    Preferred when docs are bounded-size (the common corpus case) — no
-    shingle-level shuffle at all; use `jaccard_pairs` for unbounded docs."""
+    two equi-joins to attach the arrays, then per-row array_intersect — no
+    shingle-level shuffle at all (docs are bounded-size)."""
     a = dsa.select(F.col("doc_id").alias("da"), F.col("sh_arr").alias("arr_a"))
     b = dsa.select(F.col("doc_id").alias("db"), F.col("sh_arr").alias("arr_b"))
     ni = F.size(F.array_intersect(F.col("arr_a"), F.col("arr_b"))).cast("double")
@@ -564,11 +449,6 @@ def simhash(docs: DataFrame, text_col: str = "text", bits: int = 16) -> DataFram
         for j in range(bits)
     )
     return voted.selectExpr("doc_id", f"CAST(({fp_sql}) AS BIGINT) AS simhash")
-
-
-def simhash16(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """16-bit simhash (see ``simhash``)."""
-    return simhash(docs, text_col, bits=16)
 
 
 def simhash_hamming_pairs(

@@ -199,7 +199,6 @@ def cell_blocked_pairs(
     cell_lo: int = 2,
     cell_hi: int | str = 9,
     threshold: float = 0.8,
-    collapse_exact: bool = True,
 ) -> DataFrame:
     """Embedding near-dup pairs via sign-bit cell blocking: one equi-join on
     the cell key instead of an all-pairs product, exact cosine ≥ threshold
@@ -225,18 +224,18 @@ def cell_blocked_pairs(
     approx-distinct stat via `cell_width_auto` (the chooser's decision
     record lives in its docstring).
 
-    ``collapse_exact`` (default on, the q35/q39b dense-duplication guard):
-    c-way exact vector clones land in the same cell and cost c² cosine
-    verifies; collapsed, each DISTINCT vector (exact md5 fingerprint)
-    enters the cell join once — the distinct-vector table comes from a
-    map-side-combined min_by aggregate, so one payload per distinct vector
-    crosses the wire — and the pair list is expanded from slim (id, rep)
-    member rows: cross-group pairs inherit the representatives' cosine
-    exactly (identical arrays ⇒ identical IEEE math), within-group pairs
-    get the group's self-sim computed once with the same expression.
-    Output is bit-identical either way (pinned by test); measured at the
-    100× replica point (1.1M vectors, 100-way clone groups): 115 s → see
-    SCALE.md."""
+    Exact-vector collapse (the q35/q39b dense-duplication guard): c-way
+    exact vector clones land in the same cell and cost c² cosine verifies;
+    collapsed, each DISTINCT vector (exact md5 fingerprint) enters the cell
+    join once — the distinct-vector table comes from a map-side-combined
+    min_by aggregate, so one payload per distinct vector crosses the wire —
+    and the pair list is expanded from slim (id, rep) member rows:
+    cross-group pairs inherit the representatives' cosine exactly
+    (identical arrays ⇒ identical IEEE math), within-group pairs get the
+    group's self-sim computed once with the same expression. Output is
+    bit-identical to the direct cell self-join (pinned by test against that
+    form); measured at the 100× replica point (1.1M vectors, 100-way clone
+    groups): 115 s uncollapsed → see SCALE.md."""
     def _auto_stat() -> int:
         # ONE small stats job (the simhash_dedup precedent): the DISTINCT-
         # vector count drives collision volume, so the sketch runs over an
@@ -259,19 +258,6 @@ def cell_blocked_pairs(
     # cosine_sim_arrow. (The same swap REGRESSED q39b by ~58%, so this is
     # a per-callsite measured choice, not a global one.)
     vcos = cosine_sim_arrow(6)
-    if not collapse_exact:
-        if cell_hi == "auto":
-            cell_hi = cell_lo + cell_width_auto(_auto_stat()) - 1
-        c = corpus.withColumn("cell", sign_cell(F.col(vec_col), cell_lo, cell_hi))
-        a = c.select(F.col(id_col).alias("va"), F.col(vec_col).alias("ea"), "cell")
-        b = c.select(F.col(id_col).alias("vb"), F.col(vec_col).alias("eb"), "cell")
-        return (
-            a.join(b, "cell")
-            .filter(F.col("va") < F.col("vb"))
-            .select("va", "vb", vcos(F.col("ea"), F.col("eb")).alias("sim"))
-            .filter(F.col("sim") >= threshold)
-        )
-
     from pyspark.sql import Window as W
 
     fp = F.md5(F.col(vec_col).cast("string"))

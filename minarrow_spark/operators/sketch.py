@@ -20,16 +20,20 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def cms_bucket(key: Column, j: int, width: int = 256) -> Column:
+# The sketch shape, fixed: cms_build, cms_estimate and the DuckDB twin
+# cms_bucket_sql must agree on it. Depth ≤ 16 (one md5 has 16 byte
+# windows); width 256 is one byte window's full range.
+CMS_DEPTH = 4
+CMS_WIDTH = 256
+
+
+def cms_bucket(key: Column, j: int) -> Column:
     """Row-j bucket of ``key``: hex chars [2j+1, 2j+2] of md5("c|"+key) as
     an int — uniform over [0, 256). ONE digest serves every sketch row
     (the minhash one-md5-sliced-into-sub-hashes trick: md5 bytes behave
     pairwise-independently, which is all CMS's analysis needs), so depth
     costs zero extra hashing — the j-salted per-row form did `depth` md5s
-    per input row and dominated q24's 100× profile. ``width`` must divide
-    256; depth ≤ 16 (32 hex chars / 2)."""
-    if 256 % width != 0:
-        raise ValueError("width must divide 256")
+    per input row and dominated q24's 100× profile."""
     if not 0 <= j < 16:
         raise ValueError("j must be in [0, 16) — one md5 has 16 byte windows")
     b = F.conv(
@@ -37,22 +41,41 @@ def cms_bucket(key: Column, j: int, width: int = 256) -> Column:
         16,
         10,
     )
-    return (b.cast("int") % width).alias(f"b{j}")
+    return (b.cast("int") % CMS_WIDTH).alias(f"b{j}")
 
 
-def cms_bucket_sql(key: str, j: int, width: int = 256) -> str:
+def cms_bucket_sql(key: str, j: int) -> str:
     """DuckDB twin of `cms_bucket` (nibble arithmetic — no conv())."""
     h = f"md5('c|' || CAST({key} AS VARCHAR))"
     nib = lambda i: f"(strpos('0123456789abcdef', substr({h}, {i}, 1)) - 1)"
-    return f"(({nib(2 * j + 1)} * 16 + {nib(2 * j + 2)}) % {width})"
+    return f"(({nib(2 * j + 1)} * 16 + {nib(2 * j + 2)}) % {CMS_WIDTH})"
+
+
+def _bucket_rows(df: DataFrame, key_col: str, keep: list) -> DataFrame:
+    """``keep`` plus one (j, bucket) row per sketch row of ``key_col``: one
+    explode over the CMS_DEPTH windows of a single digest."""
+    k = F.col(key_col)
+    rows = df.select(
+        *keep,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(F.lit(j).alias("j"), cms_bucket(k, j).alias("bucket"))
+                    for j in range(CMS_DEPTH)
+                ]
+            )
+        ).alias("jb"),
+    )
+    kept = [c for c in rows.columns if c != "jb"]
+    return rows.select(
+        *kept, F.col("jb.j").alias("j"), F.col("jb.bucket").alias("bucket")
+    )
 
 
 def cms_build(
     df: DataFrame,
     key_col: str,
     group_cols: list[str] | None = None,
-    depth: int = 4,
-    width: int = 256,
     weight_col: str | None = None,
 ) -> DataFrame:
     """Build one sketch per ``group_cols`` combination (or one global):
@@ -67,24 +90,8 @@ def cms_build(
     the sketch rides the (group, key) count table that the heavy-hitter
     tier aggregates anyway, ~30× less md5 at the 100× point."""
     gc = list(group_cols or [])
-    k = F.col(key_col)
     w = F.col(weight_col) if weight_col else F.lit(1)
-    rows = df.select(
-        *gc,
-        w.alias("_w"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("j"), cms_bucket(k, j, width).alias("bucket")
-                    )
-                    for j in range(depth)
-                ]
-            )
-        ).alias("jb"),
-    ).select(
-        *gc, "_w", F.col("jb.j").alias("j"), F.col("jb.bucket").alias("bucket")
-    )
+    rows = _bucket_rows(df, key_col, [*gc, w.alias("_w")])
     return rows.groupBy(*gc, "j", "bucket").agg(
         F.sum("_w").cast("bigint").alias("c")
     )
@@ -95,8 +102,6 @@ def cms_estimate(
     keys: DataFrame,
     key_col: str,
     group_cols: list[str] | None = None,
-    depth: int = 4,
-    width: int = 256,
     out_col: str = "cms_est",
 ) -> DataFrame:
     """Point-estimate the frequency of each row of ``keys``: join each
@@ -104,21 +109,7 @@ def cms_estimate(
     ``keys`` is expected to be small (heavy-hitter candidates) — the probe
     table broadcasts; the sketch is groups·depth·width rows."""
     gc = list(group_cols or [])
-    k = F.col(key_col)
-    probes = keys.select(
-        *gc,
-        key_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("j"), cms_bucket(k, j, width).alias("bucket")
-                    )
-                    for j in range(depth)
-                ]
-            )
-        ).alias("jb"),
-    ).select(*gc, key_col, F.col("jb.j").alias("j"), F.col("jb.bucket").alias("bucket"))
+    probes = _bucket_rows(keys, key_col, [*gc, key_col])
     return (
         sketch.join(F.broadcast(probes), [*gc, "j", "bucket"])
         .groupBy(*gc, key_col)

@@ -393,12 +393,12 @@ def q35_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     4 bands → bucket self-join → exact jaccard verify on colliding rows
     only. The shingle-array table feeding the three consumers (signature +
     both jaccard attaches) is materialized once by a GC-scoped eager
-    localCheckpoint (see the operator docstring for the measured lazy-race
-    trade-off) — no all-pairs comparison anywhere. Minhash
-    width only moves the candidate false-positive rate (jaccard verify
-    decides values), so the 16-bit packing is pure throughput."""
+    localCheckpoint (see the operator's orchestration comment for the
+    measured lazy-race trade-off) — no all-pairs comparison anywhere.
+    Minhash width only moves the candidate false-positive rate (jaccard
+    verify decides values), so the 16-bit packing is pure throughput."""
     docs = augment_with_near_dups(par(T(spark, sf_dir, "documents")))
-    jp = minhash_lsh_jaccard(docs, k=3, num_hashes=8, band_size=2, hash_bits=16)
+    jp = minhash_lsh_jaccard(docs)
     return jp.select(
         "da", "db", "jaccard", (F.col("jaccard") >= 0.5).alias("is_near")
     )

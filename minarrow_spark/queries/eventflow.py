@@ -132,6 +132,7 @@ def q46_hopping_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     tier's serving read scans rollup-cardinality rows (windows × types),
     never raw history — the O(new-data) refresh pattern hypertables use."""
     from minarrow_spark.streaming.rollup import (
+        WINDOW,
         compact_rollup,
         rollup_view,
         rollup_writer,
@@ -156,7 +157,7 @@ def q46_hopping_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     scratch = scratch_dir("rollup", sf_dir)
     raw_dir, comp_dir = str(scratch / "partials"), str(scratch / "compacted")
-    write_batch = rollup_writer(raw_dir, "1 hour")
+    write_batch = rollup_writer(raw_dir)
     # The three batch writes are INDEPENDENT jobs (each scans+aggregates
     # its own event slice into its own batch=<id> dir) — submit them
     # concurrently from threads (the q35 orchestration pattern; job
@@ -181,7 +182,7 @@ def q46_hopping_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     # approx_*_ok pattern), proving sketch partials survive the batch
     # split + compaction + merge-on-read path losslessly.
     exact_users = (
-        e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        e.groupBy(F.window("ts", WINDOW).alias("w"), "event_type")
         .agg(F.countDistinct("user_id").alias("n_users"))
         .select(
             F.unix_timestamp(F.col("w.start")).cast("bigint").alias("window_start"),

@@ -23,8 +23,12 @@ from minarrow_spark.operators.similarity import brute_force_topk, cosine_sim_sql
 from minarrow_spark.queries._util import T, par, scratch_dir
 from minarrow_spark.registry import query
 
+# DuckDB form of cosine_sim_sql. A zero-norm vector gives NULL, as the
+# Spark side's try_divide does; list_cosine_similarity alone returns -1.0.
 _COS = (
-    "round(list_cosine_similarity(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[])), 6)"
+    "round(CASE WHEN list_dot_product(CAST({a} AS DOUBLE[]), CAST({a} AS DOUBLE[])) = 0"
+    " OR list_dot_product(CAST({b} AS DOUBLE[]), CAST({b} AS DOUBLE[])) = 0 THEN NULL"
+    " ELSE list_cosine_similarity(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[])) END, 6)"
 )
 
 

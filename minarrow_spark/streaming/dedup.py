@@ -7,10 +7,12 @@ continuously; each new document must be checked against the full corpus
 seen so far. Recomputing batch MinHash-LSH over all history per micro-batch
 is O(history); the incremental form is O(new data):
 
-* each micro-batch computes its docs' LSH **band keys** (identical hash
-  definition to the batch operator — ``operators/dedup.minhash_signatures``
-  / ``lsh_candidates``, equivalence pinned there) and probes the
-  accumulated band-key state with one join;
+* each micro-batch computes its docs' LSH **band keys** with the batch
+  operator's one MinHash body (``operators/dedup._signature`` /
+  ``_band_keys``: word 3-gram shingles, 8 × 16-bit minhashes from one md5
+  per shingle, 4 bands of 2), pinned to an independent ``hashlib`` band
+  reference in tests/test_streaming.py, and probes the accumulated
+  band-key state with one join;
 * a doc is a duplicate iff any of its band keys was seen in an earlier
   batch, or earlier (lower ``doc_id``) within its own batch — first
   arrival wins, deterministically;
@@ -20,7 +22,7 @@ is O(history); the incremental form is O(new data):
   the state sink is idempotent (effectively exactly-once), the same LSM
   shape as ``streaming/rollup.py``;
 * state grows with DISTINCT band keys (corpus-scale but signature-sized —
-  ~n_bands small rows per doc, no text, no shingles); ``compact_state``
+  4 small rows per doc, no text, no shingles); ``compact_state``
   folds the per-batch files into one min-merged set, and the probe join is
   a plain equi-join that a real deployment bucket-partitions by band_key.
 
@@ -43,74 +45,30 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from minarrow_spark.operators.dedup import (
+    K,
+    _band_keys,
+    _signature,
     shingles,
     simhash,
     simhash_width_auto,
 )
 
 
-def band_rows(
-    docs: DataFrame,
-    text_col: str = "text",
-    num_hashes: int = 8,
-    band_size: int = 2,
-    k: int = 3,
-) -> DataFrame:
-    """(doc_id, band_id, band_key) rows — the same band-key definition as
-    ``operators/dedup.lsh_candidates`` (md5 over concatenated signature
-    slices), factored so batch and streaming tiers share one hash.
-
-    Physical shape (r8): explode → md5 → map-side-combined groupBy minima,
-    the fused operator's hot path — the original per-row HOF form
-    (``minhash_signatures``'s array_min∘transform) evaluates lambdas
-    INTERPRETED and cost q34's stream tier 22 s at the 10× point; this
-    form computes the identical hashes inside whole-stage codegen (the
-    slices are min'd over the same salted digests, so values are
-    bit-identical; docs with no shingles simply have no rows here, the
-    same docs the HOF form dropped via null band keys)."""
-    hash_bits = 16
-    per_md5 = 128 // hash_bits
-    width = hash_bits // 4
-    n_md5 = -(-num_hashes // per_md5)  # ceil
+def band_rows(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """(doc_id, band_id, band_key) rows: the batch operator's MinHash
+    signature and band keys (``operators/dedup._signature`` /
+    ``_band_keys``, its one fixed config), grouped per doc, so batch and
+    streaming tiers share one hash. Docs with no shingles have no
+    signature row and never collide."""
     sh = docs.select(
         "doc_id",
         F.explode(
-            F.array_distinct(shingles(F.col(text_col), k))
+            F.array_distinct(shingles(F.col(text_col), K))
         ).alias("shingle"),
     )
-    src = sh.select(
-        "doc_id",
-        *[
-            F.md5(F.concat(F.lit(f"{i}|"), F.col("shingle"))).alias(f"m{i}")
-            for i in range(n_md5)
-        ],
-    )
-    sig = src.groupBy("doc_id").agg(
-        *[
-            F.min(
-                F.substring(
-                    F.col(f"m{i // per_md5}"), 1 + width * (i % per_md5), width
-                )
-            ).alias(f"h{i}")
-            for i in range(num_hashes)
-        ]
-    )
-    n_bands = num_hashes // band_size
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.md5(
-                    F.concat(
-                        *[F.col(f"h{b * band_size + j}") for j in range(band_size)]
-                    )
-                ).alias("band_key"),
-            )
-            for b in range(n_bands)
-        ]
-    )
     return (
-        sig.select("doc_id", F.explode(bands).alias("b"))
+        _signature(sh, ["doc_id"])
+        .select("doc_id", F.explode(_band_keys()).alias("b"))
         .select("doc_id", "b.band_id", "b.band_key")
         .filter(F.col("band_key").isNotNull())  # shingle-less docs never collide
     )
@@ -235,9 +193,6 @@ def dedup_writer(
     state_dir: str,
     out_dir: str,
     text_col: str = "text",
-    num_hashes: int = 8,
-    band_size: int = 2,
-    k: int = 3,
     method: str = "minhash",
     width: int | str = 32,
 ):
@@ -259,7 +214,7 @@ def dedup_writer(
             bits = _resolve_width(state_dir, batch, width, text_col)
             keys = simhash_band_rows(batch, text_col, width=bits)
         else:
-            keys = band_rows(batch, text_col, num_hashes, band_size, k)
+            keys = band_rows(batch, text_col)
         # reused by probe, within-batch min, and the state write → one compute
         keys = keys.localCheckpoint(eager=True)
         batch_first = keys.groupBy("band_id", "band_key").agg(
@@ -364,9 +319,6 @@ def compact_state(spark: SparkSession, state_dir: str, out_dir: str) -> DataFram
 def batch_twin(
     docs: DataFrame,
     text_col: str = "text",
-    num_hashes: int = 8,
-    band_size: int = 2,
-    k: int = 3,
     method: str = "minhash",
     width: int = 32,
 ) -> DataFrame:
@@ -378,7 +330,7 @@ def batch_twin(
     if method == "simhash":
         keys = simhash_band_rows(docs, text_col, width=int(width))
     else:
-        keys = band_rows(docs, text_col, num_hashes, band_size, k)
+        keys = band_rows(docs, text_col)
     first = keys.groupBy("band_id", "band_key").agg(F.min("doc_id").alias("first_id"))
     dups = (
         keys.join(first, ["band_id", "band_key"])

@@ -29,7 +29,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def _partial_agg(batch: DataFrame, window: str) -> DataFrame:
+# The rollup grain. Writer, stream and batch twin must agree on it, so it
+# is fixed here rather than passed.
+WINDOW = "1 hour"
+
+
+def _partial_agg(batch: DataFrame) -> DataFrame:
     """Per-batch partial rollup: decomposable measures (count + exact
     scaled-long sum) PLUS a mergeable Datasketches HLL sketch of user_id,
     keyed by (window_start, event_type).
@@ -40,7 +45,7 @@ def _partial_agg(batch: DataFrame, window: str) -> DataFrame:
     ANY batch split union to the identical state the one-shot aggregate
     produces — deterministic, order-free, and a few KB per row at rest."""
     return (
-        batch.groupBy(F.window("ts", window).alias("w"), "event_type")
+        batch.groupBy(F.window("ts", WINDOW).alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.round(F.col("value") * 100).cast("long")).alias("value_cents"),
@@ -56,30 +61,51 @@ def _partial_agg(batch: DataFrame, window: str) -> DataFrame:
     )
 
 
-def rollup_writer(rollup_dir: str, window: str = "1 hour"):
+def _merge_partials(partials: DataFrame) -> DataFrame:
+    """The merge algebra: partials → one partial per (window_start,
+    event_type). Sum-of-counts, sum-of-cents and the HLL register-max
+    union are all associative, so any batch split or compaction order
+    merges to the same state."""
+    return partials.groupBy("window_start", "event_type").agg(
+        F.sum("n").cast("bigint").alias("n"),
+        F.sum("value_cents").cast("bigint").alias("value_cents"),
+        F.hll_union_agg("users_hll").alias("users_hll"),
+    )
+
+
+def _finalize(merged: DataFrame) -> DataFrame:
+    """Merged partials → served measures: exact cents back to a double
+    total, the sketch to its distinct-users estimate."""
+    return merged.select(
+        "window_start",
+        "event_type",
+        "n",
+        (F.col("value_cents").cast("decimal(38,0)") / 100)
+        .cast("double")
+        .alias("total_value"),
+        F.hll_sketch_estimate("users_hll").cast("bigint").alias("approx_users"),
+    )
+
+
+def rollup_writer(rollup_dir: str):
     """foreachBatch callback: write this batch's partial aggregate under
     ``batch=<id>``, overwriting any previous attempt of the SAME batch —
     replays after failure/restart are idempotent."""
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        _partial_agg(batch, window).coalesce(1).write.mode("overwrite").parquet(
+        _partial_agg(batch).coalesce(1).write.mode("overwrite").parquet(
             f"{rollup_dir}/batch={batch_id}"
         )
 
     return write_batch
 
 
-def continuous_rollup(
-    events: DataFrame,
-    rollup_dir: str,
-    checkpoint_dir: str,
-    window: str = "1 hour",
-):
+def continuous_rollup(events: DataFrame, rollup_dir: str, checkpoint_dir: str):
     """Start the rollup maintenance stream (availableNow: drain what exists,
     then stop — on a live cluster use a processingTime trigger instead).
     Returns the StreamingQuery handle."""
     return (
-        events.writeStream.foreachBatch(rollup_writer(rollup_dir, window))
+        events.writeStream.foreachBatch(rollup_writer(rollup_dir))
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
@@ -90,42 +116,16 @@ def rollup_view(spark: SparkSession, rollup_dir: str) -> DataFrame:
     """Merge-on-read over the partial files: one groupBy over
     rollup-cardinality rows (windows × types, NOT raw events). Exact: long
     sums merge associatively regardless of how batches split the data."""
-    return (
-        spark.read.parquet(rollup_dir)
-        .groupBy("window_start", "event_type")
-        .agg(
-            F.sum("n").cast("bigint").alias("n"),
-            (F.sum("value_cents").cast("decimal(38,0)") / 100)
-            .cast("double")
-            .alias("total_value"),
-            F.hll_sketch_estimate(F.hll_union_agg("users_hll"))
-            .cast("bigint")
-            .alias("approx_users"),
-        )
-    )
+    return _finalize(_merge_partials(spark.read.parquet(rollup_dir)))
 
 
-def rollup_batch_twin(events: DataFrame, window: str = "1 hour") -> DataFrame:
+def rollup_batch_twin(events: DataFrame) -> DataFrame:
     """The one-shot batch recomputation of the same rollup (for equivalence
     tests and backfills): identical measures, identical cents math."""
-    return (
-        _partial_agg(events, window)
-        .groupBy("window_start", "event_type")
-        .agg(
-            F.sum("n").cast("bigint").alias("n"),
-            (F.sum("value_cents").cast("decimal(38,0)") / 100)
-            .cast("double")
-            .alias("total_value"),
-            F.hll_sketch_estimate(F.hll_union_agg("users_hll"))
-            .cast("bigint")
-            .alias("approx_users"),
-        )
-    )
+    return _finalize(_merge_partials(_partial_agg(events)))
 
 
-def compact_rollup(
-    spark: SparkSession, rollup_dir: str, out_dir: str, window_col: str = "window_start"
-) -> DataFrame:
+def compact_rollup(spark: SparkSession, rollup_dir: str, out_dir: str) -> DataFrame:
     """Fold accumulated batch=* partials into one consolidated partial set
     (the LSM compaction step: many small per-batch files → one file per
     shuffle partition, same merge algebra, identical view results).
@@ -134,15 +134,6 @@ def compact_rollup(
     still be appending to ``rollup_dir``; the caller swaps directories or
     repoints readers once the write commits). Returns the compacted frame.
     """
-    compacted = (
-        spark.read.parquet(rollup_dir)
-        .groupBy(window_col, "event_type")
-        .agg(
-            F.sum("n").cast("bigint").alias("n"),
-            F.sum("value_cents").cast("bigint").alias("value_cents"),
-            # sketches compact like any other partial: register-max union
-            F.hll_union_agg("users_hll").alias("users_hll"),
-        )
-    )
+    compacted = _merge_partials(spark.read.parquet(rollup_dir))
     compacted.write.mode("overwrite").parquet(out_dir)
     return compacted

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from minarrow_spark.operators.dedup import (
     exact_dedup,
     minhash_lsh_jaccard,
-    simhash16,
+    simhash,
 )
 from minarrow_spark.operators.joins import asof_join
 from minarrow_spark.operators.sampling import hash_sample, train_test_split
@@ -26,7 +26,7 @@ def test_dedup_operators_empty(spark, sf_dir):
     docs = _empty(load_table(spark, sf_dir, "documents"))
     d = exact_dedup(docs)
     assert d.count() == 0 and d.columns == ["fp", "keep_id", "n_copies"]
-    s = simhash16(docs)
+    s = simhash(docs)
     assert s.count() == 0 and s.columns == ["doc_id", "simhash"]
     j = minhash_lsh_jaccard(docs)
     assert j.count() == 0 and j.columns == ["da", "db", "jaccard"]

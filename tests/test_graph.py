@@ -102,7 +102,7 @@ def test_dedup_clusters_from_minhash_pairs(spark, sf_dir):
         spark.read.parquet(f"{sf_dir}/documents.parquet")
     )
     pairs = (
-        minhash_lsh_jaccard(docs, k=3, num_hashes=8, band_size=2)
+        minhash_lsh_jaccard(docs)
         .filter(F.col("jaccard") >= 0.5)
         .select("da", "db")
     )

@@ -102,6 +102,22 @@ def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
     assert pruned.count() == l.filter(F.col("l_returnflag") == "A").count()
 
 
+def _composed_minhash(docs):
+    """The per-doc composed pipeline (minhash_signatures → lsh_candidates →
+    jaccard_pairs_arr): no exact-clone collapse, every doc is banded and
+    verified on its own — the reference form for the fused operator."""
+    from minarrow_spark.operators.dedup import (
+        doc_shingle_arrays,
+        jaccard_pairs_arr,
+        lsh_candidates,
+        minhash_signatures,
+    )
+
+    dsa = doc_shingle_arrays(docs)
+    cands = lsh_candidates(minhash_signatures(dsa))
+    return jaccard_pairs_arr(cands, dsa).select("da", "db", "jaccard")
+
+
 def test_minhash_composed_equals_fused(spark, sf_dir):
     """The composable pieces (minhash_signatures → lsh_candidates →
     jaccard_pairs_arr) and the fused minhash_lsh_jaccard operator share one
@@ -109,29 +125,23 @@ def test_minhash_composed_equals_fused(spark, sf_dir):
     mix tiers without changing results."""
     from minarrow_spark.operators.dedup import (
         augment_with_near_dups,
-        doc_shingle_arrays,
-        jaccard_pairs_arr,
-        lsh_candidates,
         minhash_lsh_jaccard,
-        minhash_signatures,
     )
 
     docs = augment_with_near_dups(load_table(spark, sf_dir, "documents"))
-    dsa = doc_shingle_arrays(docs, k=3)
-    sig = minhash_signatures(dsa, num_hashes=8)
-    cands = lsh_candidates(sig, num_hashes=8, band_size=2)
-    composed = jaccard_pairs_arr(cands, dsa).select("da", "db", "jaccard")
-    fused = minhash_lsh_jaccard(docs, k=3, num_hashes=8, band_size=2)
+    composed = _composed_minhash(docs)
+    fused = minhash_lsh_jaccard(docs)
     assert _canon(composed) == _canon(fused)
 
 
 def test_minhash_exact_collapse_equivalence(spark, sf_dir):
-    """collapse_exact must be a pure work optimization: on a corpus where
-    every doc has an exact clone (the dense-duplication case it exists
-    for — c-way clone clusters put c identical signatures in every LSH
-    bucket, c² candidate pairs uncollapsed), the collapsed pipeline's
-    pair list is bit-identical to the direct one, including the
-    within-clone jaccard=1.0 pairs and every cross-clone expansion."""
+    """The exact-clone collapse must be a pure work optimization: on a
+    corpus where every doc has an exact clone (the dense-duplication case
+    it exists for — c-way clone clusters put c identical signatures in
+    every LSH bucket, c² candidate pairs uncollapsed), the fused operator's
+    pair list is bit-identical to the uncollapsed composed pipeline,
+    including the within-clone jaccard=1.0 pairs and every cross-clone
+    expansion."""
     from minarrow_spark.operators.dedup import (
         augment_with_near_dups,
         minhash_lsh_jaccard,
@@ -141,18 +151,22 @@ def test_minhash_exact_collapse_equivalence(spark, sf_dir):
     corpus = docs.unionByName(
         docs.withColumn("doc_id", F.col("doc_id") + 10_000_000)
     )
-    collapsed = minhash_lsh_jaccard(corpus, collapse_exact=True)
-    direct = minhash_lsh_jaccard(corpus, collapse_exact=False)
-    rc, rd = _canon(collapsed), _canon(direct)
+    rc = _canon(minhash_lsh_jaccard(corpus))
+    rd = _canon(_composed_minhash(corpus))
     assert rc == rd
     assert any(j == 1.0 for _, _, j in rc)  # clone pairs present
 
 
 def test_cell_blocked_exact_collapse_equivalence(spark, sf_dir):
-    """Same contract for the embedding-cell family: collapse_exact must be
-    a pure work optimization — identical pair lists (incl. the clone
-    self-sim pairs) on a corpus where every vector has an exact clone."""
-    from minarrow_spark.operators.similarity import cell_blocked_pairs
+    """Same contract for the embedding-cell family: the exact-vector
+    collapse must be a pure work optimization — identical pair lists
+    (incl. the clone self-sim pairs) to the direct cell self-join on a
+    corpus where every vector has an exact clone."""
+    from minarrow_spark.operators.similarity import (
+        cell_blocked_pairs,
+        cosine_sim_arrow,
+        sign_cell,
+    )
 
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
@@ -160,9 +174,18 @@ def test_cell_blocked_exact_collapse_equivalence(spark, sf_dir):
     corpus = e.unionByName(
         e.withColumn("vec_id", F.col("vec_id") + 10_000_000)
     )
-    rc = _canon(cell_blocked_pairs(corpus, collapse_exact=True))
-    rd = _canon(cell_blocked_pairs(corpus, collapse_exact=False))
-    assert rc == rd
+    # Reference: every vector joins its cell directly, no collapse.
+    c = corpus.withColumn("cell", sign_cell(F.col("emb"), 2, 9))
+    a = c.select(F.col("vec_id").alias("va"), F.col("emb").alias("ea"), "cell")
+    b = c.select(F.col("vec_id").alias("vb"), F.col("emb").alias("eb"), "cell")
+    direct = (
+        a.join(b, "cell")
+        .filter(F.col("va") < F.col("vb"))
+        .select("va", "vb", cosine_sim_arrow(6)(F.col("ea"), F.col("eb")).alias("sim"))
+        .filter(F.col("sim") >= 0.8)
+    )
+    rc = _canon(cell_blocked_pairs(corpus))
+    assert rc == _canon(direct)
     assert len(rc) > 0
 
 
@@ -187,8 +210,8 @@ def test_collapse_equivalence_mixed_multiplicity(spark, sf_dir):
     corpus = parts[0]
     for p in parts[1:]:
         corpus = corpus.unionByName(p)
-    rc = _canon(minhash_lsh_jaccard(corpus, collapse_exact=True))
-    rd = _canon(minhash_lsh_jaccard(corpus, collapse_exact=False))
+    rc = _canon(minhash_lsh_jaccard(corpus))
+    rd = _canon(_composed_minhash(corpus))
     assert rc == rd
     assert any(j == 1.0 for _, _, j in rc)
 

@@ -153,8 +153,12 @@ def test_cosine_sim_sql_twin_matches_column_form(spark):
     """cosine_sim_sql (the only body of the cosine contract) must stay
     value- and type-identical to the Column-operator reference below,
     including the try_divide zero-norm → NULL contract and float→double
-    widening."""
+    widening. The DuckDB oracle form (q38/q39 ``_COS``) must give the same
+    values, NULL included."""
+    import duckdb
+
     from minarrow_spark.operators.similarity import cosine_sim_sql
+    from minarrow_spark.queries.similarity import _COS
 
     def reference(a, b, digits=6):
         a, b = a.cast("array<double>"), b.cast("array<double>")
@@ -172,6 +176,7 @@ def test_cosine_sim_sql_twin_matches_column_form(spark):
         (3, [1.5, -2.5], [1.5, -2.5]),            # identical -> 1.0
         (4, [1e-8, 1e8], [-1e8, 1e-8]),           # orthogonal -> 0.0
         (5, [0.1, 0.2, 0.3], [0.0, 0.0, 0.0]),    # zero norm other side
+        (6, [0.0, 0.0], [0.0, 0.0]),              # both zero -> NULL
     ]
     df = spark.createDataFrame(rows, "id long, a array<float>, b array<float>")
     out = df.select(
@@ -184,7 +189,15 @@ def test_cosine_sim_sql_twin_matches_column_form(spark):
     ]
     got = {r.id: r.sql_form for r in out.collect() if r.col_form == r.sql_form}
     assert len(got) == len(rows), got
-    assert got[2] is None and got[5] is None and got[3] == 1.0 and got[4] == 0.0
+    assert got[2] is None and got[5] is None and got[6] is None
+    assert got[3] == 1.0 and got[4] == 0.0
+    con = duckdb.connect()
+    oracle = {
+        i: con.execute(f"SELECT {_COS.format(a=a, b=b)}").fetchone()[0]
+        for i, a, b in rows
+    }
+    con.close()
+    assert oracle == got, oracle
 
 
 def test_brute_force_topk_quotes_column_names(spark):

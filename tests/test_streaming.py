@@ -366,8 +366,9 @@ def test_rollup_hll_distinct_users_accuracy(spark, sf_dir):
 def test_band_rows_matches_hof_signature_form(spark):
     """band_rows' codegen explode→groupBy form (r8) must produce the EXACT
     (doc_id, band_id, band_key) set the original HOF composition
-    (minhash_signatures over doc_shingle_arrays + md5 band concat) does —
-    the drift guard for the duplicated hash definition."""
+    (minhash_signatures over doc_shingle_arrays + hashlib md5 band concat)
+    does — the check on the shared ``_signature``/``_band_keys`` definition
+    that does not depend on it."""
     import os as _os
 
     from minarrow_spark.operators.dedup import (
@@ -384,7 +385,7 @@ def test_band_rows_matches_hof_signature_form(spark):
         (r.doc_id, r.band_id, r.band_key)
         for r in band_rows(docs).collect()
     }
-    sig = minhash_signatures(doc_shingle_arrays(docs, 3), 8)
+    sig = minhash_signatures(doc_shingle_arrays(docs))
     hof = set()
     for r in sig.collect():
         if r.h0 is None:
