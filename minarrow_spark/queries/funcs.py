@@ -46,7 +46,8 @@ from minarrow_spark.registry import query
            repeat(p_brand, 2) AS rep2,
            lpad(p_brand, 12, '*') AS padded,
            trim(p_name) AS trimmed,
-           reverse(p_brand) AS rev,
+           -- DuckDB's reverse() flips grapheme clusters; Spark's flips codepoints
+           array_to_string(list_reverse(string_split(p_brand, '')), '') AS rev,
            concat(p_brand, '#', p_type) AS joined,
            regexp_replace(p_name, '[aeiou]', '_', 'g') AS devoweled,
            replace(p_name, 'a', '@') AS replaced,

@@ -715,8 +715,10 @@ def test_string_kernels_match_duckdb(spark, rows):
     agree character-for-character on arbitrary text (the fixed vectors in
     q21 can't cover combining marks, astral-plane chars, or pad-overflow
     truncation). Both engines index by CODEPOINT, pad/truncate lpad to
-    exactly n chars, and reverse codepoints (not graphemes) — that shared
-    convention is what this pins."""
+    exactly n chars, and Spark's reverse flips codepoints. DuckDB's
+    ``reverse()`` flips grapheme clusters (a combining mark stays after its
+    base), so the oracle reverses the codepoint list instead — the same form
+    q21's oracle uses."""
     import duckdb
 
     data = [(i, s, start, ln) for i, (s, start, ln) in enumerate(rows)]
@@ -739,7 +741,8 @@ def test_string_kernels_match_duckdb(spark, rows):
         i: tuple(vals)
         for i, *vals in con.execute(
             "SELECT i, substr(s, st, ln), lpad(s, 9, '*'), repeat(s, 2),"
-            " reverse(s), replace(s, 'a', '@') FROM t"
+            " array_to_string(list_reverse(string_split(s, '')), ''),"
+            " replace(s, 'a', '@') FROM t"
         ).fetchall()
     }
     con.close()
