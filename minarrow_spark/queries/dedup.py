@@ -256,7 +256,7 @@ def q34_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # files, then the compacted state itself as output rows.
     import os as _os
 
-    from minarrow_spark.streaming.dedup import compact_state, dedup_writer
+    from minarrow_spark.streaming.dedup import STATE_SCHEMA, compact_state, dedup_writer
     from minarrow_spark.streaming.dedup import verdicts as stream_verdicts
 
     scratch = scratch_dir("sdedup", sf_dir)
@@ -327,7 +327,8 @@ def q34_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("batch").cast("bigint").alias("keep_id"),
         F.col("is_dup").cast("bigint").alias("n_copies"),
     )
-    fold = spark.read.parquet(_os.path.join(comp, "batch=-1")).select(
+    fold_dir = _os.path.join(comp, "batch=-1")
+    fold = spark.read.schema(STATE_SCHEMA).parquet(fold_dir).select(
         F.lit("fold").alias("tier"),
         F.col("band_key").alias("fp"),
         F.col("first_id").cast("bigint").alias("keep_id"),

@@ -416,7 +416,7 @@ def q38b_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # int8 at rest — the q38b int8 tier's 4× scan shrink, incrementally
     # maintained. Replay cost is 2 batches of near-fixed job-boundary
     # overhead (the q34 r9 lesson: batches cost boundaries, not rows).
-    from minarrow_spark.streaming.ann import ann_writer
+    from minarrow_spark.streaming.ann import INDEX_SCHEMA, ann_writer, neighbors
 
     scratch = scratch_dir("sann", sf_dir)
     idx_dir, out_dir = str(scratch / "index"), str(scratch / "out")
@@ -449,7 +449,8 @@ def q38b_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         " (c, i) -> (cast(c as bigint) + 128) * i), 0L, (a, x) -> a + x)"
     )
     sidx = (
-        spark.read.option("basePath", idx_dir)
+        spark.read.schema(INDEX_SCHEMA)
+        .option("basePath", idx_dir)
         .parquet(idx_dir)
         .select(
             F.lit("sidx").alias("tier"),
@@ -460,8 +461,7 @@ def q38b_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sann = (
-        spark.read.option("basePath", out_dir)
-        .parquet(out_dir)  # batch=0 is the empty no-prior-index frame
+        neighbors(spark, out_dir)  # batch=0 is the empty no-prior-index frame
         .select(
             F.lit("sann").alias("tier"),
             "q_id",

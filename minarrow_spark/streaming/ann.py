@@ -41,8 +41,18 @@ from minarrow_spark.operators.similarity import (
     quantize_embeddings,
     sign_cell,
 )
+from minarrow_spark.streaming.rollup import prior_batches
 
 CELL_LO, CELL_HI = 1, 4  # 16 cells — the q38b coarse quantizer
+
+# At-rest schemas, exactly what ``ann_writer`` writes (pinned against it in
+# tests/test_streaming.py): every reader passes them, so no read runs a
+# schema-inference job. A ``batch`` partition column joins them on read.
+INDEX_SCHEMA = (
+    "cell string, vec_id bigint, q_offset double, q_scale double, "
+    "codes array<tinyint>"
+)
+NEIGHBOR_SCHEMA = "q_id bigint, c_id bigint, sim double, rank bigint"
 
 
 def _indexed(batch: DataFrame, vec_col: str) -> DataFrame:
@@ -57,18 +67,6 @@ def _indexed(batch: DataFrame, vec_col: str) -> DataFrame:
         "q_scale",
         "codes",
     )
-
-
-def _read_index(spark: SparkSession, index_dir: str, before_batch: int) -> DataFrame:
-    try:
-        prior = spark.read.option("basePath", index_dir).parquet(index_dir)
-    except Exception:
-        return spark.createDataFrame(
-            [],
-            "cell string, vec_id bigint, q_offset double, q_scale double, "
-            "codes array<tinyint>",
-        )
-    return prior.filter(F.col("batch") < before_batch).drop("batch")
 
 
 def ann_writer(index_dir: str, out_dir: str, vec_col: str = "embedding", k: int = 3):
@@ -92,7 +90,7 @@ def ann_writer(index_dir: str, out_dir: str, vec_col: str = "embedding", k: int 
             ),
         )
         index = dequantize_embeddings(
-            _read_index(spark, index_dir, batch_id), out_col="c_vec"
+            prior_batches(spark, index_dir, INDEX_SCHEMA, batch_id), out_col="c_vec"
         ).select("cell", F.col("vec_id").alias("c_id"), "c_vec")
         scored = probes.join(index, "cell").select(
             "q_id", "c_id", F.expr(cosine_sim_sql("`q_vec`", "`c_vec`")).alias("sim")
@@ -162,7 +160,9 @@ def streaming_ann(
 
 def neighbors(spark: SparkSession, out_dir: str) -> DataFrame:
     """All streamed neighbor verdicts so far: (q_id, c_id, sim, rank, batch)."""
-    return spark.read.option("basePath", out_dir).parquet(out_dir)
+    return (
+        spark.read.schema(NEIGHBOR_SCHEMA).option("basePath", out_dir).parquet(out_dir)
+    )
 
 
 def batch_twin(

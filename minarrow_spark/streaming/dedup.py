@@ -52,6 +52,13 @@ from minarrow_spark.operators.dedup import (
     simhash,
     simhash_width_auto,
 )
+from minarrow_spark.streaming.rollup import prior_batches
+
+# At-rest schemas, exactly what ``dedup_writer`` writes (pinned against it
+# in tests/test_streaming.py): every reader passes them, so no read runs a
+# schema-inference job. A ``batch`` partition column joins them on read.
+STATE_SCHEMA = "band_id int, band_key string, first_id bigint"
+VERDICT_SCHEMA = "doc_id bigint, is_dup boolean"
 
 
 def band_rows(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -174,21 +181,6 @@ def _resolve_width(
     return bits
 
 
-def _read_state(spark: SparkSession, state_dir: str, before_batch: int) -> DataFrame:
-    """Accumulated band-key state from batches strictly before ``before_batch``
-    (a replayed batch must not probe its own earlier attempt). Merge-on-read;
-    empty frame when no state exists yet."""
-    try:
-        prior = spark.read.option("basePath", state_dir).parquet(state_dir)
-    except Exception:
-        return spark.createDataFrame(
-            [], "band_id int, band_key string, first_id bigint"
-        )
-    return prior.filter(F.col("batch") < before_batch).select(
-        "band_id", "band_key", "first_id"
-    )
-
-
 def dedup_writer(
     state_dir: str,
     out_dir: str,
@@ -220,7 +212,7 @@ def dedup_writer(
         batch_first = keys.groupBy("band_id", "band_key").agg(
             F.min("doc_id").alias("first_id")
         )
-        prior = _read_state(spark, state_dir, batch_id)
+        prior = prior_batches(spark, state_dir, STATE_SCHEMA, batch_id)
         hit_prior = keys.join(
             prior.select("band_id", "band_key"), ["band_id", "band_key"], "left_semi"
         ).select("doc_id")
@@ -284,7 +276,9 @@ def streaming_dedup(
 
 def verdicts(spark: SparkSession, out_dir: str) -> DataFrame:
     """All per-doc verdicts written so far: (doc_id, is_dup, batch)."""
-    return spark.read.option("basePath", out_dir).parquet(out_dir)
+    return (
+        spark.read.schema(VERDICT_SCHEMA).option("basePath", out_dir).parquet(out_dir)
+    )
 
 
 def compact_state(spark: SparkSession, state_dir: str, out_dir: str) -> DataFrame:
@@ -294,7 +288,7 @@ def compact_state(spark: SparkSession, state_dir: str, out_dir: str) -> DataFram
     (never in place: a live stream may still be appending) under
     ``batch=-1`` — a sentinel no foreachBatch id can ever take, so the
     compacted directory IS a valid state lineage for ANY resumed or fresh
-    stream: ``_read_state``'s ``batch < before_batch`` filter includes the
+    stream: the probe's ``batch < before_batch`` filter includes the
     fold for every batch id down to 0, and a FRESH checkpoint's batch 0
     both probes the folded history and appends beside it without
     clobbering (r9 — under the previous ``batch=0`` layout a fresh
@@ -302,7 +296,8 @@ def compact_state(spark: SparkSession, state_dir: str, out_dir: str) -> DataFram
     silent history loss; r8's flat layout was unreadable as state
     entirely)."""
     compacted = (
-        spark.read.option("basePath", state_dir)
+        spark.read.schema(STATE_SCHEMA)
+        .option("basePath", state_dir)
         .parquet(state_dir)
         .groupBy("band_id", "band_key")
         .agg(F.min("first_id").alias("first_id"))

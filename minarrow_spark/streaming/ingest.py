@@ -19,11 +19,12 @@ from __future__ import annotations
 
 import os
 import tempfile
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from minarrow_spark.sources.catalog import load_table
+from minarrow_spark.sources.catalog import _path_sig, load_table
 
 
 def replay_dir(
@@ -62,12 +63,29 @@ def replay_frame_dir(
     return out
 
 
+# Per-session memo of each replay directory's inferred schema, keyed like
+# the catalog's _PLAN_CACHE: the first chunk's absolute path plus its
+# (mtime_ns, size) signature, so a rewritten chunk=0000 misses. Schema
+# inference runs a Spark job on every `spark.read.parquet` call; a landing
+# directory polled once per cycle would otherwise pay it every cycle. Only
+# successful inferences are stored.
+_SCHEMA_MEMO: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
 def read_event_stream(
     spark: SparkSession, replay_path: str, files_per_trigger: int = 1
 ) -> DataFrame:
     """readStream over the replay directory — micro-batch ingestion with
-    Count-style rechunk policy (files per trigger)."""
-    schema = spark.read.parquet(os.path.join(replay_path, "chunk=0000")).schema
+    Count-style rechunk policy (files per trigger). The schema is inferred
+    from ``chunk=0000`` once per directory and session (one Spark job),
+    then memoised until that chunk is rewritten; chunks of one directory
+    must share it."""
+    first = os.path.abspath(os.path.join(replay_path, "chunk=0000"))
+    memo = _SCHEMA_MEMO.setdefault(spark, {})
+    key = (first, _path_sig(first))
+    schema = memo.get(key)
+    if schema is None:
+        schema = memo[key] = spark.read.parquet(first).schema
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", files_per_trigger)

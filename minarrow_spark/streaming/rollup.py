@@ -12,7 +12,12 @@ refresh is O(history); a continuous rollup is O(new data):
   foreachBatch's batch_id is stable across restarts from the same
   checkpoint, so the sink is idempotent (effectively exactly-once);
 * reads merge partials with one small groupBy (sum-of-sums, sum-of-counts)
-  — the LSM shape: cheap appends, merge-on-read, optional compaction.
+  — the LSM shape: cheap appends, merge-on-read, optional compaction;
+* every read of the at-rest files — here and in the dedup and ANN state
+  tiers — uses the writer's declared schema (``PARTIAL_SCHEMA``), so
+  serving runs no schema-inference job (``spark.read.parquet`` without a
+  schema runs one on every call); only the ``batch=<id>`` partition
+  column is discovered from the paths.
 
 Measures are carried as scaled longs (value × 100 → cents), so partial
 merges are EXACT under any batch split — the same partial-agg algebra
@@ -25,6 +30,8 @@ is the at-rest, restart-safe, distributed counterpart for aggregates.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -32,6 +39,13 @@ from pyspark.sql import functions as F
 # The rollup grain. Writer, stream and batch twin must agree on it, so it
 # is fixed here rather than passed.
 WINDOW = "1 hour"
+
+# The at-rest schema of a partial, exactly what ``_partial_agg`` writes
+# (pinned against it in tests/test_streaming.py).
+PARTIAL_SCHEMA = (
+    "window_start BIGINT, event_type STRING, n BIGINT, value_cents BIGINT, "
+    "users_hll BINARY"
+)
 
 
 def _partial_agg(batch: DataFrame) -> DataFrame:
@@ -113,10 +127,30 @@ def continuous_rollup(events: DataFrame, rollup_dir: str, checkpoint_dir: str):
 
 
 def rollup_view(spark: SparkSession, rollup_dir: str) -> DataFrame:
-    """Merge-on-read over the partial files: one groupBy over
-    rollup-cardinality rows (windows × types, NOT raw events). Exact: long
-    sums merge associatively regardless of how batches split the data."""
-    return _finalize(_merge_partials(spark.read.parquet(rollup_dir)))
+    """Merge-on-read over the partial files, read with ``PARTIAL_SCHEMA``
+    (no inference job): one groupBy over rollup-cardinality rows (windows ×
+    types, NOT raw events). Exact: long sums merge associatively regardless
+    of how batches split the data."""
+    partials = spark.read.schema(PARTIAL_SCHEMA).parquet(rollup_dir)
+    return _finalize(_merge_partials(partials))
+
+
+def prior_batches(
+    spark: SparkSession, lsm_dir: str, schema: str, before_batch: int
+) -> DataFrame:
+    """Rows of the ``batch=<id>`` partials under ``lsm_dir`` with id below
+    ``before_batch``, read with their declared ``schema`` (the state tables
+    of streaming/dedup.py and streaming/ann.py: a replayed batch must not
+    probe its own earlier attempt). An empty frame when no partial exists
+    yet: the directory is missing or holds only side files such as a
+    ``_WIDTH.json`` pin. A partial that cannot be read fails the action
+    that scans it; it is never taken for an empty state."""
+    if not os.path.isdir(lsm_dir) or not any(
+        name.startswith("batch=") for name in os.listdir(lsm_dir)
+    ):
+        return spark.createDataFrame([], schema)
+    prior = spark.read.schema(schema).option("basePath", lsm_dir).parquet(lsm_dir)
+    return prior.filter(F.col("batch") < before_batch).drop("batch")
 
 
 def rollup_batch_twin(events: DataFrame) -> DataFrame:
@@ -134,6 +168,7 @@ def compact_rollup(spark: SparkSession, rollup_dir: str, out_dir: str) -> DataFr
     still be appending to ``rollup_dir``; the caller swaps directories or
     repoints readers once the write commits). Returns the compacted frame.
     """
-    compacted = _merge_partials(spark.read.parquet(rollup_dir))
+    partials = spark.read.schema(PARTIAL_SCHEMA).parquet(rollup_dir)
+    compacted = _merge_partials(partials)
     compacted.write.mode("overwrite").parquet(out_dir)
     return compacted

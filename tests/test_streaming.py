@@ -740,3 +740,125 @@ def test_streaming_dedup_simhash_widths(spark, tmp_path):
     )
     with open(os.path.join(state2, "_WIDTH.json")) as fh:
         assert json.load(fh)["width"] == 32
+
+
+def _jobs_run(spark, build) -> int:
+    """Spark jobs started while ``build()`` runs, counted by job group."""
+    sc = spark.sparkContext
+    group = f"declared-schema-{os.getpid()}-{id(build)}"
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _small_docs(spark):
+    return spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps"),
+            (2, "the quick brown fox jumps over"),
+            (3, "an unrelated sentence here"),
+        ],
+        "doc_id bigint, text string",
+    )
+
+
+def _small_vecs(spark):
+    from tests.conftest import SF_SMALL
+
+    return (
+        spark.read.parquet(os.path.join(SF_SMALL, "embeddings.parquet"))
+        .select("vec_id", "embedding")
+        .orderBy("vec_id")
+        .limit(40)
+    )
+
+
+def test_declared_schemas_match_writers(spark, sf_dir, tmp_path):
+    """Each declared at-rest schema equals what its writer produces
+    (nullability aside), so a drifting writer fails here rather than a
+    read at serve time."""
+    from minarrow_spark.streaming.ann import INDEX_SCHEMA, NEIGHBOR_SCHEMA, ann_writer
+    from minarrow_spark.streaming.dedup import (
+        STATE_SCHEMA,
+        VERDICT_SCHEMA,
+        dedup_writer,
+    )
+    from minarrow_spark.streaming.rollup import PARTIAL_SCHEMA, _partial_agg
+
+    def declared(ddl):
+        return spark.createDataFrame([], ddl).schema.simpleString()
+
+    def written(path):  # inferred from the files, as the parent read them
+        return spark.read.parquet(path).schema.simpleString()
+
+    partial = _partial_agg(load_table(spark, sf_dir, "events"))
+    assert partial.schema.simpleString() == declared(PARTIAL_SCHEMA)
+
+    state, out = str(tmp_path / "state"), str(tmp_path / "out")
+    dedup_writer(state, out)(_small_docs(spark), 0)
+    assert written(os.path.join(state, "batch=0")) == declared(STATE_SCHEMA)
+    assert written(os.path.join(out, "batch=0")) == declared(VERDICT_SCHEMA)
+
+    index, nb = str(tmp_path / "index"), str(tmp_path / "nb")
+    ann_writer(index, nb)(_small_vecs(spark), 0)
+    assert written(os.path.join(index, "batch=0")) == declared(INDEX_SCHEMA)
+    assert written(os.path.join(nb, "batch=0")) == declared(NEIGHBOR_SCHEMA)
+
+
+def test_unreadable_state_partial_is_not_empty_state(spark, tmp_path):
+    """A state or index dir whose only partial is not parquet must fail the
+    next batch's probe, not read as "no state yet" (which would probe
+    every doc as new). A missing dir is still the empty state."""
+    from minarrow_spark.streaming.ann import ann_writer
+    from minarrow_spark.streaming.dedup import dedup_writer
+
+    for name in ("state", "index"):
+        os.makedirs(tmp_path / name / "batch=0")
+        (tmp_path / name / "batch=0" / "part-00000.parquet").write_bytes(
+            b"not a parquet file"
+        )
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        dedup_writer(str(tmp_path / "state"), str(tmp_path / "out"))(
+            _small_docs(spark), 1
+        )
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        ann_writer(str(tmp_path / "index"), str(tmp_path / "nb"))(
+            _small_vecs(spark), 1
+        )
+    # no state dir at all: batch 0 probes nothing and writes its verdicts
+    fresh_out = str(tmp_path / "fresh_out")
+    dedup_writer(str(tmp_path / "fresh_state"), fresh_out)(_small_docs(spark), 0)
+    assert spark.read.parquet(os.path.join(fresh_out, "batch=0")).count() == 3
+
+
+def test_rollup_view_builds_without_jobs(spark, replay, tmp_path):
+    """Building the merge-on-read view over 3 partials runs no Spark job:
+    the partials are read with PARTIAL_SCHEMA, not inferred."""
+    from minarrow_spark.streaming import rollup_view, rollup_writer
+
+    rollup_dir = str(tmp_path / "rollup")
+    chunk0 = spark.read.parquet(os.path.join(replay, "chunk=0000"))
+    for b in range(3):
+        rollup_writer(rollup_dir)(chunk0.filter(F.col("event_id") % 3 == b), b)
+    assert _jobs_run(spark, lambda: rollup_view(spark, rollup_dir)) == 0
+    view = rollup_view(spark, rollup_dir)
+    assert sum(r["n"] for r in view.collect()) == chunk0.count()
+
+
+def test_read_event_stream_infers_schema_once_per_directory(spark, sf_dir, tmp_path):
+    """A second readStream over the same replay dir runs no inference job;
+    rewriting chunk=0000 with another column misses the memo."""
+    e = load_table(spark, sf_dir, "events").limit(50)
+    first = str(tmp_path / "chunk=0000")
+    e.write.parquet(first)
+    replay = str(tmp_path)
+    read_event_stream(spark, replay)
+    got = []
+    assert _jobs_run(spark, lambda: got.append(read_event_stream(spark, replay))) == 0
+    assert got[0].columns == e.columns
+    e.withColumn("extra", F.lit(1)).write.mode("overwrite").parquet(first)
+    assert read_event_stream(spark, replay).columns == e.columns + ["extra"]
