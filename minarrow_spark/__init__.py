@@ -14,7 +14,7 @@ Module map:
 
 * ``session``   — SparkSession factory with scale-appropriate defaults
 * ``sources``   — parquet catalog, Arrow interop (``map_in_arrow`` escape
-  hatch), bucketed/partitioned layouts
+  hatch), the registrable ``arrow_ipc`` format
 * ``functions`` — scalar kernels with reference-pinned semantics
   (arithmetic, strings, datetimes, text analysis)
 * ``operators`` — distributed operators: dedup (5 families), similarity
@@ -22,7 +22,7 @@ Module map:
 * ``queries``   — the registered query surface (each with a DuckDB oracle)
 * ``streaming`` — Structured Streaming twins (watermarked windows, stateful
   ops, stream-stream joins)
-* ``plans``     — physical-plan inspection (shuffle counts, pushdown checks)
+* ``plans``     — physical-plan inspection (shuffle counts)
 """
 
 from minarrow_spark.registry import all_queries
@@ -31,7 +31,6 @@ from minarrow_spark.table import MinTable
 from minarrow_spark.sources.arrow_io import (
     arrow_batches,
     from_arrow,
-    from_matrix,
     map_in_arrow,
     to_arrow,
     to_matrix,
@@ -43,7 +42,6 @@ __all__ = [
     "all_queries",
     "arrow_batches",
     "from_arrow",
-    "from_matrix",
     "get_spark",
     "load_table",
     "map_in_arrow",

@@ -1,8 +1,6 @@
 from minarrow_spark.functions.arithmetic import (
     dec,
-    exact_avg,
     exact_sum,
-    exact_var_samp,
     floordiv,
     remainder,
     table_op,
@@ -13,11 +11,8 @@ from minarrow_spark.functions.strings import (
     char_length,
     count_match,
     find0,
-    str_join_agg,
 )
 from minarrow_spark.functions.datetimes import (
-    add_days,
-    add_months_,
     date_str,
     epoch_micros,
     epoch_seconds,
@@ -27,8 +22,7 @@ from minarrow_spark.functions.datetimes import (
 )
 
 __all__ = [
-    "dec", "exact_avg", "exact_sum", "exact_var_samp", "floordiv", "remainder",
-    "table_op", "try_div", "byte_length", "char_length", "count_match", "find0",
-    "str_join_agg", "add_days", "add_months_", "date_str", "epoch_micros",
-    "epoch_seconds", "is_leap_year", "iso_dow", "iso_week",
+    "dec", "exact_sum", "floordiv", "remainder", "table_op", "try_div",
+    "byte_length", "char_length", "count_match", "find0", "date_str",
+    "epoch_micros", "epoch_seconds", "is_leap_year", "iso_dow", "iso_week",
 ]

@@ -15,8 +15,7 @@ Reference semantics being reproduced (citations into /root/reference/):
   table (`src/kernels/broadcast/mod.rs:116-152`, ~10 kLoC of Rust) → `table_op`,
   a few lines of column projection that Catalyst fuses into one codegen stage.
 
-Exact-aggregation helpers (`exact_sum`/`exact_avg`/`exact_var_samp`) exist for
-oracle determinism: double sums are order-sensitive under parallel execution,
+The exact-aggregation helper (`exact_sum`) exists for oracle determinism: double sums are order-sensitive under parallel execution,
 decimal sums are not. At 100 TB this is also the *correct* accounting pattern
 (revenue in decimal, not float).
 """
@@ -37,51 +36,14 @@ _NUMERIC_TYPES = (
 )
 
 
-def dec(col: Column | str, typ: str = DEC) -> Column:
+def dec(col: Column | str) -> Column:
     """Cast to exact decimal for order-independent aggregation."""
-    return F.col(col).cast(typ) if isinstance(col, str) else col.cast(typ)
+    return F.col(col).cast(DEC) if isinstance(col, str) else col.cast(DEC)
 
 
 def exact_sum(col: Column | str, alias: str) -> Column:
     """Order-independent SUM of a double column: decimal-sum, emit double."""
     return F.sum(dec(col)).cast("double").alias(alias)
-
-
-def exact_avg(col: Column | str, alias: str) -> Column:
-    """AVG from an exact decimal sum: deterministic across engines/partitions."""
-    return (F.sum(dec(col)).cast("double") / F.count(F.lit(1))).alias(alias)
-
-
-def exact_var_samp(col: Column | str, alias: str, ddof: int = 1) -> Column:
-    """Sample variance from exact decimal partial sums.
-
-    var = (Σx² − (Σx)²/n) / (n − ddof), with Σx and Σx² exact decimals —
-    the final expression is scalar double math on identical inputs in any
-    engine, so it hash-matches where a streaming variance would not.
-    """
-    c = dec(col)
-    s1 = F.sum(c).cast("double")
-    s2 = F.sum((c * c).cast("decimal(38,4)")).cast("double")
-    n = F.count(F.lit(1)).cast("double")
-    return ((s2 - s1 * s1 / n) / (n - F.lit(float(ddof)))).alias(alias)
-
-
-def checked_cast(col: Column, target: str) -> Column:
-    """Narrowing cast with checked semantics: null on overflow, never a
-    silent wraparound.
-
-    The reference's 61-impl cast matrix narrows via checked ``TryFrom``
-    (`/root/reference/src/conversions.rs:80-1000`) — out-of-range values
-    become an error/None, not a truncated bit pattern. Spark's plain
-    ``cast`` with ANSI off silently wraps (int64→int32 keeps the low 32
-    bits); ``try_cast`` is the engine's checked path and behaves the same
-    under either ANSI setting. Policy: every narrowing conversion at the
-    engine boundary goes through here → out-of-range maps to null (the
-    masked-array rule, same as division by zero). Property-pinned against
-    Python range semantics in tests/test_semantics_props.py. The widening
-    direction needs no checks — see the unsigned-widening table in
-    sources/arrow_io.py."""
-    return col.try_cast(target)
 
 
 def try_div(a: Column, b: Column) -> Column:

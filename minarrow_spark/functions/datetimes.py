@@ -44,16 +44,6 @@ def is_leap_year(col: Column) -> Column:
     return ((y % 4 == 0) & ((y % 100 != 0) | (y % 400 == 0)))
 
 
-def add_days(col: Column, n: int) -> Column:
-    """Calendar day add on the date part (reference `add_days`, D5)."""
-    return F.date_add(F.to_date(col), n)
-
-
-def add_months_(col: Column, n: int) -> Column:
-    """Month add with end-of-month clamping (reference `add_months`, D5)."""
-    return F.add_months(F.to_date(col), n)
-
-
 def date_str(col: Column) -> Column:
     """Canonical yyyy-MM-dd string (hash-safe cross-engine output form).
 

@@ -13,9 +13,6 @@ Semantic adapters:
   `octet_length`.
 * `count_match` — reference counts non-overlapping occurrences
   (`string.rs:1388`); Spark 3.5+ `regexp_count`.
-* `str_join_agg` — reference `join` collapses all rows into one delimited
-  string (`string.rs:1889`) → `concat_ws` over `collect_list` (an aggregate,
-  order made explicit by the caller via prior sort or array_sort).
 """
 
 from __future__ import annotations
@@ -40,15 +37,3 @@ def find0(col: Column, sub: str) -> Column:
 def count_match(col: Column, pattern: str) -> Column:
     """Occurrences of regex ``pattern`` per row (reference `count_match`)."""
     return F.regexp_count(col, F.lit(pattern)).cast("bigint")
-
-
-def str_join_agg(col: Column, delim: str, sorted_: bool = True) -> Column:
-    """All rows → one delimited string (reference `join`, `string.rs:1889`).
-
-    Distributed caveat the reference never had: collect_list order is
-    partition-dependent, so we sort the array for a deterministic result.
-    """
-    arr = F.collect_list(col)
-    if sorted_:
-        arr = F.array_sort(arr)
-    return F.concat_ws(delim, arr)

@@ -221,7 +221,7 @@ def char_gram_hashes(text: Column, n: int = 4) -> Column:
     )
 
 
-def normalize_text(text: Column, lowercase: bool = False) -> Column:
+def normalize_text(text: Column) -> Column:
     """Cleaning-tier text normalization, pure Catalyst (codegen, zero
     Python): strip C0/C1 control characters (except \\t \\n \\r), drop
     zero-width/BOM code points, collapse all whitespace runs to single
@@ -231,8 +231,7 @@ def normalize_text(text: Column, lowercase: bool = False) -> Column:
     # ZWSP/ZWNJ/ZWJ/WORD-JOINER/BOM, written as escapes (literal invisible
     # code points in source are unreviewable and formatter-fragile).
     t = F.regexp_replace(t, "[\\u200b\\u200c\\u200d\\u2060\\ufeff]", "")
-    t = F.trim(F.regexp_replace(t, WS, " "))
-    return F.lower(t) if lowercase else t
+    return F.trim(F.regexp_replace(t, WS, " "))
 
 
 def normalize_text_nfc(df, text_col: str = "text", form: str = "NFC"):

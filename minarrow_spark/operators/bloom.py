@@ -25,6 +25,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+N_HASHES = 4
+# bloom_build_auto's sizing rule (see its docstring)
+BITS_PER_KEY = 10
+MIN_BITS = 1 << 14
+MAX_BITS = 1 << 20
+MAX_HIT_RATE = 0.3
+
 
 def _positions(key: Column, n_hashes: int, n_bits: int) -> list[Column]:
     """k deterministic bit positions sliced from ⌈k/4⌉ md5 digests: digest
@@ -50,7 +57,7 @@ def _positions(key: Column, n_hashes: int, n_bits: int) -> list[Column]:
 
 
 def bloom_build(
-    keys: DataFrame, key: str, n_hashes: int = 4, n_bits: int = 1 << 14
+    keys: DataFrame, key: str, n_hashes: int = N_HASHES, n_bits: int = MIN_BITS
 ) -> list[int]:
     """Build the filter over ``keys[key]`` (distinct not required — OR is
     idempotent). Returns the word array (python ints, n_bits/64 longs) —
@@ -83,13 +90,8 @@ def bloom_build(
 def bloom_build_auto(
     keys: DataFrame,
     key: str,
-    n_hashes: int = 4,
-    bits_per_key: int = 10,
-    min_bits: int = 1 << 14,
-    max_bits: int = 1 << 20,
     probe_keys: DataFrame | None = None,
     probe_key: str | None = None,
-    max_hit_rate: float = 0.3,
 ) -> tuple[list[int], int] | None:
     """Size the filter from the keys' actual cardinality, or REFUSE.
 
@@ -100,8 +102,8 @@ def bloom_build_auto(
       fixed 2 KB filter completely, so every probe passed (the bloom stage
       cost ~10.5 s for zero pruned rows). One map-side-combined
       ``approx_count_distinct`` row (HLL ±2%, model state) picks
-      n_bits ≈ bits_per_key × NDV (next power of two, ~1% FP at 10
-      bits/key, k=4); past ``max_bits`` (128 KB of plan-literal words) the
+      n_bits ≈ BITS_PER_KEY × NDV (next power of two, ~1% FP at 10
+      bits/key, k=4); past ``MAX_BITS`` (128 KB of plan-literal words) the
       dim is not "selective" and the right 1000-executor plan is the plain
       exact join → return None. The 1.25× slack keeps the HLL error band
       from flapping the decision at the boundary.
@@ -109,7 +111,7 @@ def bloom_build_auto(
       custkeys: the filter fits, but it passes ~95% of probe rows, so the
       build+probe never pays. With ``probe_keys`` given, a second HLL row
       estimates the probe side's key domain and the build REFUSES when
-      dim NDV > max_hit_rate × probe NDV (prune rate under ~70%).
+      dim NDV > MAX_HIT_RATE × probe NDV (prune rate under ~70%).
 
     Honest scope note: any dim small enough for a plan-literal filter is
     also small enough for Spark to broadcast, where a hash-set probe beats
@@ -120,22 +122,22 @@ def bloom_build_auto(
     and the refusal discipline that keeps it from ever being a regression.
     """
     ndv = keys.agg(F.approx_count_distinct(key).alias("n")).collect()[0]["n"]
-    need = max(min_bits, bits_per_key * max(int(ndv), 1))
-    if need > max_bits * 1.25:
+    need = max(MIN_BITS, BITS_PER_KEY * max(int(ndv), 1))
+    if need > MAX_BITS * 1.25:
         return None
     if probe_keys is not None:
         pcol = probe_key or key
         probe_ndv = probe_keys.agg(
             F.approx_count_distinct(pcol).alias("n")
         ).collect()[0]["n"]
-        if int(ndv) > max_hit_rate * max(int(probe_ndv), 1):
+        if int(ndv) > MAX_HIT_RATE * max(int(probe_ndv), 1):
             return None
-    n_bits = min(1 << (need - 1).bit_length(), max_bits)
-    return bloom_build(keys, key, n_hashes, n_bits), n_bits
+    n_bits = min(1 << (need - 1).bit_length(), MAX_BITS)
+    return bloom_build(keys, key, N_HASHES, n_bits), n_bits
 
 
 def bloom_might_contain(
-    key: Column, words: list[int], n_hashes: int = 4, n_bits: int = 1 << 14
+    key: Column, words: list[int], n_hashes: int = N_HASHES, n_bits: int = MIN_BITS
 ) -> Column:
     """Membership test against a built filter — a pure codegen expression
     (k md5s + k bit probes into a literal array), no shuffle, no Python.
@@ -154,35 +156,3 @@ def bloom_might_contain(
         )
         cond = hit if cond is None else (cond & hit)
     return cond
-
-
-def bloom_semi_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: str,
-    n_hashes: int = 4,
-    n_bits: int | None = None,
-) -> DataFrame:
-    """Exact left-semi join with Bloom scan pruning: filter the fact scan
-    by the dim-key filter (drops most non-matches before the shuffle),
-    then the exact semi-join removes the false positives — results are
-    IDENTICAL to ``fact.join(dim, on, "left_semi")`` at a fraction of the
-    shuffled rows. With ``n_bits=None`` (default) the filter is NDV-sized
-    via :func:`bloom_build_auto` — which also refuses when the dim would
-    saturate the filter OR cover most of the fact's key domain — and on
-    refusal the prune step is skipped entirely: same exact result, no
-    dead-weight filter."""
-    keys = dim.select(on)
-    if n_bits is None:
-        built = bloom_build_auto(
-            keys, on, n_hashes, probe_keys=fact.select(on), probe_key=on
-        )
-    else:
-        built = (bloom_build(keys, on, n_hashes, n_bits), n_bits)
-    pruned = fact
-    if built is not None:
-        words, sized_bits = built
-        pruned = fact.filter(
-            bloom_might_contain(F.col(on), words, n_hashes, sized_bits)
-        )
-    return pruned.join(keys.distinct(), on, "left_semi")

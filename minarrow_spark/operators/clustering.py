@@ -1,5 +1,5 @@
 """K-means clustering over embedding columns — the curation op behind
-cluster-balanced sampling and SemDeDup-style semantic dedup at corpus scale.
+SemDeDup-style semantic dedup at corpus scale.
 
 Fixed-iteration Lloyd's algorithm, Spark-first:
 
@@ -36,8 +36,6 @@ beyond-reference extension op in the same family as dedup/similarity.
 """
 
 from __future__ import annotations
-
-from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -98,20 +96,6 @@ def _centroid_rows(assigned: DataFrame, vec_col: str) -> DataFrame:
     )
 
 
-def exact_mean(values, scale: int = 9) -> float:
-    """The update step's arithmetic, replicated for test oracles: each
-    double x rounds as round(x·10^scale) HALF_UP on the double product
-    (Spark's F.round on DOUBLE — HALF_UP over the shortest decimal repr,
-    which coincides with round-half-away on the binary value), the integer
-    scaled sum S is exact, and the mean is the IEEE chain (S/n)/10^scale."""
-    m = 10**scale
-    s = sum(
-        int(Decimal(repr(float(x) * m)).quantize(Decimal(1), ROUND_HALF_UP))
-        for x in values
-    )
-    return (float(s) / len(values)) / float(m)
-
-
 def kmeans_fit(
     df: DataFrame,
     k: int = 8,
@@ -138,28 +122,3 @@ def kmeans_fit(
         # empty clusters keep their previous centroid
         cents = [new.get(i, c) for i, c in enumerate(cents)]
     return cents, kmeans_assign(df, cents, id_col, vec_col)
-
-
-def cluster_balanced_sample(
-    assigned: DataFrame,
-    per_cluster: int,
-    id_col: str = "vec_id",
-    salt: str = "",
-) -> DataFrame:
-    """Take a deterministic per-cluster sample: the ``per_cluster`` rows
-    with the lowest salted key-hash in each cluster (reproducible and
-    engine-portable, unlike RNG sampling — see operators/sampling.py).
-    The balancing counter to web-scale source skew: every semantic cluster
-    contributes equally to the curated set."""
-    from pyspark.sql import Window as W
-
-    from minarrow_spark.operators.sampling import hash_key
-
-    w = W.partitionBy("cluster").orderBy(
-        hash_key(F.col(id_col), salt), F.col(id_col)
-    )
-    return (
-        assigned.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= per_cluster)
-        .drop("_rk")
-    )

@@ -31,16 +31,21 @@ from minarrow_spark.functions.text import shingles, tokens
 # --------------------------------------------------------------------------
 
 
-def augment_with_near_dups(
-    docs: DataFrame, every: int = 10, id_offset: int = 100_000, drop_tokens: int = 5
-) -> DataFrame:
-    """Append a perturbed copy of every ``every``-th doc (first ``drop_tokens``
-    tokens removed, id shifted) — gives dedup queries a known dup population.
+# every 10th doc gets a copy with id + 100000 and its first 5 tokens dropped
+NEAR_DUP_EVERY, NEAR_DUP_ID_OFFSET, NEAR_DUP_DROP_TOKENS = 10, 100_000, 5
+
+
+def augment_with_near_dups(docs: DataFrame) -> DataFrame:
+    """Append a perturbed copy of every ``NEAR_DUP_EVERY``-th doc (first
+    ``NEAR_DUP_DROP_TOKENS`` tokens removed, id shifted by
+    ``NEAR_DUP_ID_OFFSET``) — gives dedup queries a known dup population.
     Deterministic; the oracle reproduces it with the same expression."""
     toks = tokens(F.col("text"))
-    variant = docs.filter(F.col("doc_id") % every == 0).select(
-        (F.col("doc_id") + id_offset).alias("doc_id"),
-        F.concat_ws(" ", F.slice(toks, drop_tokens + 1, F.size(toks))).alias("text"),
+    variant = docs.filter(F.col("doc_id") % NEAR_DUP_EVERY == 0).select(
+        (F.col("doc_id") + NEAR_DUP_ID_OFFSET).alias("doc_id"),
+        F.concat_ws(
+            " ", F.slice(toks, NEAR_DUP_DROP_TOKENS + 1, F.size(toks))
+        ).alias("text"),
         "lang",
         "source",
         F.col("n_chars"),

@@ -3,11 +3,10 @@
 Convention: media travels as an opaque ``binary`` column plus typed metadata
 columns (mime, width/height/duration, codec). The Spark-side plumbing —
 schemas, partition sizing, Arrow batch shapes, UDF signatures — is real and
-tested on the deterministic tier; the real codec (``decode_image_real`` and
-``resize_stub(decoder='real')``, Pillow) is import-gated (r9) — it runs
-where Pillow is installed (tests skip-mark it otherwise; the grading
-container has no codec libs), and the default pipelines keep the
-deterministic fake decoder so oracles stay reproducible end-to-end.
+tested on the deterministic tier; the real codec (``decode_image_real``,
+Pillow) is import-gated (r9) — it runs where Pillow is installed (tests
+skip-mark it otherwise), and the default pipelines keep the deterministic
+fake decoder so oracles stay reproducible end-to-end.
 
 Scale notes:
 * mapInPandas streams Arrow batches — peak memory is one batch per task, so
@@ -27,16 +26,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("meta_width", T.IntegerType(), True),
-        T.StructField("meta_height", T.IntegerType(), True),
-    ]
-)
 
 FEATURE_SCHEMA = T.StructType(
     [
@@ -140,61 +129,6 @@ def extract_features(media: DataFrame, decoder: str = "fake") -> DataFrame:
 
     sized = media.select("media_id", "payload")
     return sized.mapInPandas(op, schema=FEATURE_SCHEMA)
-
-
-def resize_stub(
-    media: DataFrame, width: int, height: int, decoder: str = "none"
-) -> DataFrame:
-    """Resize plumbing: passes payloads through the Python worker with target
-    dims attached. ``decoder='none'`` (default) leaves payloads untouched —
-    the deterministic tier. ``decoder='real'`` decodes, resizes, and
-    re-encodes each payload as PNG via Pillow (import-gated, r9). Output
-    schema == input schema + resize metadata either way, so the operator
-    composes in pipelines identically on both tiers."""
-    if decoder not in ("none", "real"):
-        raise ValueError(f"decoder must be 'none' or 'real', got {decoder!r}")
-    if decoder == "real":
-        # Probe the import DRIVER-side at build time so a missing Pillow is
-        # an immediate, self-explanatory error instead of a raw ImportError
-        # buried in a Python-worker task failure (r10 advice).
-        try:
-            import PIL  # noqa: F401
-        except ImportError as ex:
-            raise NotImplementedError(
-                "real resize needs Pillow; use decoder='none' (pass-through "
-                "plumbing tier) where no codec lib is installed"
-            ) from ex
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if decoder == "real":
-            import io
-
-            from PIL import Image  # worker-side import, gated at build time
-
-            def resize_png(p):
-                if p is None:
-                    return None
-                with Image.open(io.BytesIO(bytes(p))) as im:
-                    buf = io.BytesIO()
-                    im.resize((width, height)).save(buf, format="PNG")
-                return buf.getvalue()
-
-        for pdf in batches:
-            out = pdf.copy()
-            out["target_width"] = width
-            out["target_height"] = height
-            if decoder == "real":
-                out["payload"] = [resize_png(p) for p in out["payload"]]
-            yield out
-
-    schema = T.StructType(
-        list(MEDIA_SCHEMA.fields)
-        + [
-            T.StructField("target_width", T.IntegerType(), False),
-            T.StructField("target_height", T.IntegerType(), False),
-        ]
-    )
-    return media.mapInPandas(op, schema=schema)
 
 
 def frame_sample_plan(media: DataFrame, every_n: int = 30) -> DataFrame:

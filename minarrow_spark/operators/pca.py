@@ -3,126 +3,34 @@ clustering / visualization of a 100 TB embedding corpus.
 
 Spark-first shape (the same decomposition MLlib's RowMatrix uses):
 
-1. **Gramian + column sums** accumulate per Arrow batch in numpy
-   (`mapInArrow` — vectorized float64, no per-row Python), emitting one
-   (d², d, n) partial row per batch; partials explode to (idx, val) rows
-   and group-sum — a shuffle of O(partitions × d²) tiny rows, never row
-   data.
-2. The **d×d covariance eigendecomposition** happens on the driver in
-   numpy: model state (64×64 here), exactly like k-means centroids — row
-   data never leaves the executors.
+1. **Gramian + column sums** (`exact_gramian`) over a dimension slice:
+   each component quantizes to 6 decimals as a scaled long, so every
+   cross-moment is an EXACT integer sum — one long-and-narrow explode and
+   group-sum, a shuffle of O(d²) tiny rows after map-side combine, never
+   row data.
+2. The **d×d covariance eigenpairs** come from power iteration plus
+   Hotelling deflation on the driver: model state (8×8 here), exactly like
+   k-means centroids — row data never leaves the executors.
 3. **Projection** folds the k×d component matrix into the plan as literal
    arrays → a pure per-row codegen projection, ZERO shuffle (same pattern
    as clustering.kmeans_assign).
 
-Determinism note: partial Gramians are float64 sums whose grouping follows
-batch boundaries, so the last ulps of the covariance — and therefore the
-components — can vary with partitioning (unlike the exact-decimal k-means
-update, d² decimal partial-sum columns would be disproportionate here).
-Tests assert tolerance-based equality against numpy, not hashes; the
-projection itself is deterministic once components are fixed.
+Determinism note: integer moment sums are order-independent under any
+partitioning and reproducible bit-for-bit by a SQL engine, and power
+iteration runs in a fixed evaluation order, so the whole pipeline
+(gramian → covariance → eigenvector → λ) hash-matches a DuckDB replay
+(q52 'pca' tier).
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-_EXACT_SCALE = 1_000_000  # 6-decimal quantization for the exact-gramian tier
-
-
-def gramian(df: DataFrame, vec_col: str = "embedding") -> tuple[np.ndarray, np.ndarray, int]:
-    """(XᵀX, column sums, row count) of the embedding matrix, distributed.
-
-    Per-batch numpy partials (d² gram + d sums + 1 count, one flat vector)
-    → element-wise group-sum of O(batches × d²) scalars → one job, one tiny
-    collect of driver-side model state."""
-    out_schema = pa.schema([pa.field("vals", pa.list_(pa.float64()))])
-
-    def partials(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            col = b.column(b.schema.get_field_index(vec_col))
-            flat = np.asarray(col.flatten(), dtype=np.float64)
-            n = len(col)
-            if n == 0:
-                continue
-            x = flat.reshape(n, -1)
-            v = np.concatenate([(x.T @ x).ravel(), x.sum(axis=0), [float(n)]])
-            yield pa.RecordBatch.from_pydict({"vals": [list(v)]}, schema=out_schema)
-
-    part = df.select(vec_col).mapInArrow(partials, "vals array<double>")
-    agg = (
-        part.select(F.posexplode("vals").alias("idx", "val"))
-        .groupBy("idx")
-        .agg(F.sum("val").alias("s"))
-        .orderBy("idx")
-    )
-    vals = np.array([r["s"] for r in agg.collect()])
-    d = int(round((np.sqrt(4 * (len(vals) - 1) + 1) - 1) / 2))  # d² + d + 1
-    return (
-        vals[: d * d].reshape(d, d),
-        vals[d * d : d * d + d],
-        int(round(vals[-1])),
-    )
-
-
-def pca_fit(
-    df: DataFrame, k: int = 8, vec_col: str = "embedding"
-) -> tuple[np.ndarray, np.ndarray]:
-    """Top-k principal components of the (centered) embedding matrix.
-
-    Returns (components k×d — rows are unit eigenvectors, sign-normalized
-    so each row's largest-|coeff| entry is positive; explained variance k).
-    """
-    g, s, n = gramian(df, vec_col)
-    mu = s / n
-    cov = g / n - np.outer(mu, mu)
-    w, v = np.linalg.eigh(cov)  # ascending
-    order = np.argsort(w)[::-1][:k]
-    comps = v[:, order].T
-    for row in comps:  # deterministic sign convention
-        j = int(np.argmax(np.abs(row)))
-        if row[j] < 0:
-            row *= -1.0
-    return comps, w[order]
-
-
-def pca_project(
-    df: DataFrame,
-    components: np.ndarray,
-    vec_col: str = "embedding",
-    out_col: str = "proj",
-) -> DataFrame:
-    """Append the k-dim projection: per-row dots with literal component
-    rows — pure codegen projection, zero shuffle, scales linearly."""
-    v = F.col(vec_col).cast("array<double>")
-
-    def dot(row: np.ndarray) -> Column:
-        carr = F.array(*[F.lit(float(x)) for x in row])
-        return F.aggregate(
-            F.zip_with(v, carr, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, t: acc + t,
-        )
-
-    return df.withColumn(out_col, F.array(*[dot(r) for r in np.asarray(components)]))
-
-
-# ---------------------------------------------------------------------------
-# Exact tier — oracle-checkable PCA over a dimension slice
-# ---------------------------------------------------------------------------
-# The float-partial gramian above is tolerance-tested (partial-sum grouping
-# follows batch boundaries). This tier instead quantizes each component to 6
-# decimals as a scaled long, so every cross-moment is an EXACT integer sum —
-# order-independent under any partitioning, and reproducible bit-for-bit by a
-# SQL engine. Power iteration then runs on the resulting covariance with a
-# fixed evaluation order, so the whole pipeline (gramian → covariance →
-# eigenvector → λ) hash-matches a DuckDB replay (q52 'pca' tier).
+_EXACT_SCALE = 1_000_000  # 6-decimal quantization of each component
 
 
 def exact_gramian(
@@ -245,3 +153,24 @@ def deflate(
         [cov[j][i] - (lam * v[j]) * v[i] for i in range(d)]
         for j in range(d)
     ]
+
+
+def pca_project(
+    df: DataFrame,
+    components: np.ndarray,
+    vec_col: str = "embedding",
+    out_col: str = "proj",
+) -> DataFrame:
+    """Append the k-dim projection: per-row dots with literal component
+    rows — pure codegen projection, zero shuffle, scales linearly."""
+    v = F.col(vec_col).cast("array<double>")
+
+    def dot(row: np.ndarray) -> Column:
+        carr = F.array(*[F.lit(float(x)) for x in row])
+        return F.aggregate(
+            F.zip_with(v, carr, lambda x, y: x * y),
+            F.lit(0.0),
+            lambda acc, t: acc + t,
+        )
+
+    return df.withColumn(out_col, F.array(*[dot(r) for r in np.asarray(components)]))

@@ -30,22 +30,23 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _HEX_CHARS = 8  # 32-bit threshold space
+_SPLIT_SALT = "split"
 
 
-def hex_threshold(fraction: float, chars: int = _HEX_CHARS) -> str:
+def hex_threshold(fraction: float) -> str:
     """Hex-string threshold t such that P(md5_prefix < t) == round
-    (fraction × 16^chars) / 16^chars for a uniform hash.
+    (fraction × 16^_HEX_CHARS) / 16^_HEX_CHARS for a uniform hash.
 
     Comparisons are lexicographic on fixed-width hex, which equals numeric
-    order ONLY at equal length — so fraction 1.0 (numerically 16^chars, a
-    longer string) maps to "g", which sorts after every hex digit and
+    order ONLY at equal length — so fraction 1.0 (numerically 16^_HEX_CHARS,
+    a longer string) maps to "g", which sorts after every hex digit and
     therefore keeps everything."""
     if not 0.0 <= fraction <= 1.0:
         raise ValueError(f"fraction must be in [0, 1], got {fraction}")
-    steps = round(fraction * 16**chars)
-    if steps >= 16**chars:
+    steps = round(fraction * 16**_HEX_CHARS)
+    if steps >= 16**_HEX_CHARS:
         return "g"
-    return format(steps, f"0{chars}x")
+    return format(steps, f"0{_HEX_CHARS}x")
 
 
 def hash_key(key: Column, salt: str = "") -> Column:
@@ -61,72 +62,19 @@ def sample_mask(key: Column, fraction: float, salt: str = "") -> Column:
     return hash_key(key, salt) < F.lit(hex_threshold(fraction))
 
 
-def hash_sample(
-    df: DataFrame, key: str, fraction: float, salt: str = ""
-) -> DataFrame:
-    """Deterministic key-hash sample: a pure filter (no shuffle, no RNG
-    state). Same keys survive on every run and in every co-sampled table."""
-    return df.filter(sample_mask(F.col(key), fraction, salt))
-
-
-def stratified_hash_sample(
-    df: DataFrame, key: str, strata: str, fractions: dict[str, float],
-    default: float = 0.0, salt: str = "",
-) -> DataFrame:
-    """Per-stratum deterministic sampling — the training-mix lever (e.g.
-    keep 100% of rare high-quality sources, 5% of crawl). Strata absent
-    from ``fractions`` fall back to ``default``. Still a pure projection —
-    the per-stratum threshold is a CASE expression, no shuffle."""
-    thr = F.lit(hex_threshold(default))
-    for value, frac in fractions.items():
-        thr = F.when(F.col(strata) == value, F.lit(hex_threshold(frac))).otherwise(thr)
-    return df.filter(hash_key(F.col(key), salt) < thr)
-
-
-def train_test_split(
-    df: DataFrame, key: str, test: float, val: float = 0.0, salt: str = "split"
-) -> DataFrame:
+def train_test_split(df: DataFrame, key: str, test: float, val: float = 0.0) -> DataFrame:
     """Attach a deterministic 'split' column ('test' / 'val' / 'train') by
     key hash: disjoint, exhaustive, reproducible, and leak-proof — every
     row of a key lands in exactly one split on every engine and every run
     (the property per-row RNG splits silently violate)."""
     if test + val > 1.0:
         raise ValueError("test + val fractions exceed 1.0")
-    h = hash_key(F.col(key), salt)
+    h = hash_key(F.col(key), _SPLIT_SALT)
     return df.withColumn(
         "split",
         F.when(h < F.lit(hex_threshold(test)), F.lit("test"))
         .when(h < F.lit(hex_threshold(test + val)), F.lit("val"))
         .otherwise(F.lit("train")),
-    )
-
-
-def epoch_shuffle(
-    df: DataFrame,
-    key: Column | str,
-    epoch: int,
-    n_partitions: int | None = None,
-) -> DataFrame:
-    """Deterministic training-epoch shuffle: a reproducible global random
-    order, re-derived per epoch — the distributed analog of shuffling the
-    dataset between training epochs.
-
-    Order key = md5(epoch | key): uniformly random but a pure function of
-    (epoch, key), so the order is identical on any rerun, any partition
-    count, any engine — and changes completely between epochs. The layout
-    is one range exchange on the hash + a within-partition sort (exactly a
-    global sort's cost); downstream sequential readers (sequence packing,
-    batch writers) consume partitions in order. No per-row RNG, no driver
-    state, no collect.
-    """
-    k = F.col(key) if isinstance(key, str) else key
-    h = F.md5(F.concat(F.lit(f"e{epoch}|"), k.cast("string")))
-    parts = n_partitions or df.sparkSession.sparkContext.defaultParallelism
-    return (
-        df.withColumn("__eo", h)
-        .repartitionByRange(parts, "__eo")
-        .sortWithinPartitions("__eo")
-        .drop("__eo")
     )
 
 

@@ -41,8 +41,11 @@ def norm_sql(a: str) -> str:
     )
 
 
-def cosine_sim_sql(a: str, b: str, digits: int = 6) -> str:
-    """Cosine similarity rounded to ``digits`` as a Spark SQL expression over
+COS_DIGITS = 6  # rounding grid of the engine's cosines (SQL and Arrow forms)
+
+
+def cosine_sim_sql(a: str, b: str) -> str:
+    """Cosine similarity rounded to ``COS_DIGITS`` as a Spark SQL expression over
     the SQL expressions ``a``/``b`` (column names go in through
     ``minarrow_spark._sql.ident``); Column call sites wrap it in ``F.expr``.
     Cross-engine determinism: double math δ ~1e-15 ≪ rounding grid.
@@ -51,7 +54,7 @@ def cosine_sim_sql(a: str, b: str, digits: int = 6) -> str:
     legacy mode — the same contract cosine_sim_arrow enforces with its
     explicit NA mask. Values, types and the zero-norm NULL are pinned in
     tests/test_semantics_props.py."""
-    return f"round(try_divide({dot_sql(a, b)}, {norm_sql(a)} * {norm_sql(b)}), {digits})"
+    return f"round(try_divide({dot_sql(a, b)}, {norm_sql(a)} * {norm_sql(b)}), {COS_DIGITS})"
 
 
 def cosine_sim_arrow(digits: int = 6) -> "Column":
@@ -257,7 +260,7 @@ def cell_blocked_pairs(
     # 2.93s → 2.14s; SCALE.md) — same rounding contract, see
     # cosine_sim_arrow. (The same swap REGRESSED q39b by ~58%, so this is
     # a per-callsite measured choice, not a global one.)
-    vcos = cosine_sim_arrow(6)
+    vcos = cosine_sim_arrow(COS_DIGITS)
     from pyspark.sql import Window as W
 
     fp = F.md5(F.col(vec_col).cast("string"))
@@ -326,26 +329,31 @@ def cell_blocked_pairs(
     return cross.unionByName(within)
 
 
-def pq_cell_keys(
-    vec: Column, m: int = 8, sub_dim: int = 8, cell_bits: int = 2
-) -> Column:
-    """Product-quantization cell assignment: split a ``m × sub_dim``-dim
-    vector into ``m`` subspaces and key each subspace by the sign bits of
-    its first ``cell_bits`` dims (deterministic — the same trick as
+# One product-quantization shape for the codebook, the codes and the ADC
+# table: PQ_M subspaces of PQ_SUB_DIM dims, each keyed by PQ_CELL_BITS sign
+# bits; ADC partial scores carry ADC_SCALE fractional digits.
+PQ_M, PQ_SUB_DIM, PQ_CELL_BITS = 8, 8, 2
+ADC_SCALE = 10
+
+
+def pq_cell_keys(vec: Column) -> Column:
+    """Product-quantization cell assignment: split a ``PQ_M × PQ_SUB_DIM``-dim
+    vector into ``PQ_M`` subspaces and key each subspace by the sign bits of
+    its first ``PQ_CELL_BITS`` dims (deterministic — the same trick as
     `sign_cell`, so the whole PQ pipeline stays exactly oracle-checkable).
-    Returns an array<int> of length ``m`` (codes 0 .. 2^cell_bits − 1).
+    Returns an array<int> of length ``PQ_M`` (codes 0 .. 2^PQ_CELL_BITS − 1).
 
     Pure codegen: m × cell_bits element_at comparisons, no shuffle, no
     Python. At 100 TB the code column is the only thing the coarse search
     reads: m bytes/vector instead of 4·dim — a 32× scan shrink at
     m=8, dim=64."""
     cells = []
-    for s in range(m):
+    for s in range(PQ_M):
         bits = [
             F.when(
-                F.element_at(vec, s * sub_dim + ds + 1) >= 0, F.lit(1 << ds)
+                F.element_at(vec, s * PQ_SUB_DIM + ds + 1) >= 0, F.lit(1 << ds)
             ).otherwise(F.lit(0))
-            for ds in range(cell_bits)
+            for ds in range(PQ_CELL_BITS)
         ]
         key = bits[0]
         for b in bits[1:]:
@@ -354,13 +362,7 @@ def pq_cell_keys(
     return F.array(*cells)
 
 
-def pq_centroids(
-    df: DataFrame,
-    vec_col: str = "emb",
-    m: int = 8,
-    sub_dim: int = 8,
-    cell_bits: int = 2,
-) -> DataFrame:
+def pq_centroids(df: DataFrame, vec_col: str = "emb") -> DataFrame:
     """Train a PQ codebook: per (subspace, cell) elementwise centroid of the
     member subvectors → rows (s, cell, ds, c), at most m · 2^cell_bits ·
     sub_dim rows (tiny — broadcast it).
@@ -374,13 +376,13 @@ def pq_centroids(
     hundred rows."""
     v = df.select(
         F.col(vec_col).alias("_v"),
-        pq_cell_keys(F.col(vec_col), m, sub_dim, cell_bits).alias("_cells"),
+        pq_cell_keys(F.col(vec_col)).alias("_cells"),
     )
     dims = (
         v.select("_cells", F.posexplode("_v").alias("d", "x"))
         .select(
-            (F.col("d") / sub_dim).cast("int").alias("s"),
-            (F.col("d") % sub_dim).alias("ds"),
+            (F.col("d") / PQ_SUB_DIM).cast("int").alias("s"),
+            (F.col("d") % PQ_SUB_DIM).alias("ds"),
             "x",
             "_cells",
         )
@@ -396,21 +398,12 @@ def pq_centroids(
     )
 
 
-def pq_codes(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "emb",
-    m: int = 8,
-    sub_dim: int = 8,
-    cell_bits: int = 2,
-) -> DataFrame:
+def pq_codes(df: DataFrame, id_col: str = "vec_id", vec_col: str = "emb") -> DataFrame:
     """Long-form PQ codes (id, s, cell) — m rows per vector, the compact
     representation the ADC scoring join consumes."""
     return df.select(
         F.col(id_col),
-        F.posexplode(pq_cell_keys(F.col(vec_col), m, sub_dim, cell_bits)).alias(
-            "s", "cell"
-        ),
+        F.posexplode(pq_cell_keys(F.col(vec_col))).alias("s", "cell"),
     )
 
 
@@ -419,15 +412,13 @@ def pq_adc_lut(
     probes: DataFrame,
     q_col: str = "q_id",
     vec_col: str = "q_vec",
-    sub_dim: int = 8,
-    scale: int = 10,
 ) -> dict:
     """ADC lookup table as MODEL STATE: for each (probe, subspace, cell) the
-    exact partial score Σ_ds CAST(qx·c AS DECIMAL(18,scale)) — the inner
+    exact partial score Σ_ds CAST(qx·c AS DECIMAL(18,ADC_SCALE)) — the inner
     regrouping of the flat per-(probe, vector) ADC sum over all (s, ds),
     exact because decimal addition is associative. Entries are returned as
-    scaled longs (value·10^scale, integral by construction: every addend
-    carries exactly ``scale`` fractional digits), so a vector's full score
+    scaled longs (value·10^ADC_SCALE, integral by construction: every addend
+    carries exactly ``ADC_SCALE`` fractional digits), so a vector's full score
     Σ_s lut[(q, s, cell_s)] is pure long codegen whose ORDER — the only
     thing ADC feeds (top-k ranking) — is identical to the decimal order.
 
@@ -444,8 +435,8 @@ def pq_adc_lut(
         )
         .select(
             q_col,
-            (F.col("d") / sub_dim).cast("int").alias("s"),
-            (F.col("d") % sub_dim).alias("ds"),
+            (F.col("d") / PQ_SUB_DIM).cast("int").alias("s"),
+            (F.col("d") % PQ_SUB_DIM).alias("ds"),
             "qx",
         )
     )
@@ -453,11 +444,11 @@ def pq_adc_lut(
         qdims.join(centroids, ["s", "ds"])
         .groupBy(q_col, "s", "cell")
         .agg(
-            F.sum((F.col("qx") * F.col("c")).cast(f"decimal(18,{scale})")).alias("p")
+            F.sum((F.col("qx") * F.col("c")).cast(f"decimal(18,{ADC_SCALE})")).alias("p")
         )
         .collect()
     )
-    return {(r[q_col], r["s"], r["cell"]): int(r["p"].scaleb(scale)) for r in rows}
+    return {(r[q_col], r["s"], r["cell"]): int(r["p"].scaleb(ADC_SCALE)) for r in rows}
 
 
 def quantize_embeddings(

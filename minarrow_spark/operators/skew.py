@@ -1,19 +1,12 @@
-"""Skew mitigation: salted aggregation and salted joins.
+"""Skew mitigation: salted aggregation.
 
-AQE's skew-join splitting (on in `session.py`) handles most skew at runtime;
-these helpers cover the two cases it can't:
-
-* **hot-key aggregation** — a groupBy where one key holds a large share of
-  all rows bottlenecks on a single reducer. `salted_agg` does a two-stage
-  aggregate: stage 1 groups on (key, salt) — spreading the hot key over
-  ``n_salts`` reducers — stage 2 merges the partials. Works for any
-  algebraic aggregate (sum/count/min/max and their compositions).
-* **hot-key broadcast-ineligible join** — `salted_join` replicates the
-  small side ``n_salts`` times and salts the big side's key, turning one hot
-  partition into ``n_salts`` even ones. Use when the small side is too big
-  to broadcast but the big side has known hot keys.
-
-Both are pure DataFrame compositions — no Python in the data path.
+AQE's skew-join splitting (on in `session.py`) handles most skew at runtime
+but not a hot-key aggregation: a groupBy where one key holds a large share
+of all rows bottlenecks on a single reducer. `salted_agg` does a two-stage
+aggregate: stage 1 groups on (key, salt) — spreading the hot key over
+``n_salts`` reducers — stage 2 merges the partials. Works for any algebraic
+aggregate (sum/count/min/max and their compositions). A pure DataFrame
+composition — no Python in the data path.
 """
 
 from __future__ import annotations
@@ -51,20 +44,3 @@ def salted_agg(
         .agg(*partial_aggs)
     )
     return staged.groupBy(*keys).agg(*merge_aggs)
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    n_salts: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-safe equi-join: salt the big side, explode the small side across
-    all salt values, join on (key, salt). Row multiplicity is preserved
-    exactly — each big-side row matches the single replica carrying its salt."""
-    bs = with_salt(big, n_salts)
-    ss = small.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
-    )
-    return bs.join(ss, [key, "__salt"], how).drop("__salt")

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+LERP_DIGITS = 6
+
 
 def gapfill(
     present: DataFrame,
@@ -24,7 +26,6 @@ def gapfill(
     key_col: str = "k",
     val_col: str = "v",
     step: int = 600,
-    digits: int = 6,
 ) -> DataFrame:
     """Fill a sparse (bucket, key, val) series onto the full regular grid
     spanning [min(bucket), max(bucket)] per ``step``, for every distinct
@@ -34,7 +35,7 @@ def gapfill(
     * ``locf`` — last non-null value at-or-before the cell (null before
       the first observation);
     * ``lerp`` — linear interpolation between the neighboring
-      observations, rounded to ``digits`` (falls back to the available
+      observations, rounded to ``LERP_DIGITS`` (falls back to the available
       side at the series edges).
     """
     span = present.agg(
@@ -88,7 +89,7 @@ def gapfill(
                 + (F.col("_nv") - F.col("locf"))
                 * (F.col(bucket_col) - F.col("_pb"))
                 / (F.col("_nb") - F.col("_pb")),
-                digits,
+                LERP_DIGITS,
             )
         )
     )

@@ -9,31 +9,30 @@ idea as Delta/Iceberg Z-ORDER clustering).
 
 `z_value` is a pure Catalyst bit-interleave (shift/mask/add — one codegen'd
 projection, no shuffle); `z_value_sql` emits the identical arithmetic for
-the DuckDB oracle, so layout keys are cross-engine checkable (q29).
-`zorder_layout` applies the physical layout: one range exchange on z plus a
-within-partition sort — exactly the cost of any global sort, amortized over
-every future scan.
+the DuckDB oracle, so layout keys are cross-engine checkable (q29). The
+physical layout is one range exchange on z plus a within-partition sort —
+exactly the cost of any global sort, amortized over every future scan.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+Z_BITS = 8  # bits per dimension
 
-def z_value(x: Column, y: Column, bits: int = 8) -> Column:
-    """Morton code of two non-negative ints truncated to ``bits`` bits each:
-    bit i of x lands at position 2i, bit i of y at 2i+1. 2·bits ≤ 62 keeps
-    the result in a long. The unrolled form stays well under codegen size
-    limits at the default 8 bits (32 scalar shift/add terms — the q39b
+
+def z_value(x: Column, y: Column) -> Column:
+    """Morton code of two non-negative ints truncated to ``Z_BITS`` bits
+    each: bit i of x lands at position 2i, bit i of y at 2i+1. 2·Z_BITS ≤
+    62 keeps the result in a long. The unrolled form stays well under
+    codegen size limits at 8 bits (32 scalar shift/add terms — the q39b
     Janino ceiling was hit by 64-term *array* expressions plus decimal
     aggs, not integer folds this small)."""
-    if not 1 <= bits <= 31:
-        raise ValueError(f"bits must be in [1, 31], got {bits}")
     xm = x.cast("long")
     ym = y.cast("long")
     terms = []
-    for i in range(bits):
+    for i in range(Z_BITS):
         terms.append(
             F.shiftleft(F.shiftrightunsigned(xm, i).bitwiseAND(F.lit(1)), 2 * i)
         )
@@ -46,46 +45,11 @@ def z_value(x: Column, y: Column, bits: int = 8) -> Column:
     return z
 
 
-def z_value_sql(x: str, y: str, bits: int = 8) -> str:
+def z_value_sql(x: str, y: str) -> str:
     """The identical Morton arithmetic as a SQL expression (DuckDB oracle
     twin of `z_value` — same shift/mask/add terms, engine-order-free)."""
     terms = []
-    for i in range(bits):
+    for i in range(Z_BITS):
         terms.append(f"((({x} >> {i}) & 1) << {2 * i})")
         terms.append(f"((({y} >> {i}) & 1) << {2 * i + 1})")
     return " + ".join(terms)
-
-
-def z_py(x: int, y: int, bits: int = 8) -> int:
-    """Python reference implementation (test oracle)."""
-    z = 0
-    for i in range(bits):
-        z |= ((x >> i) & 1) << (2 * i)
-        z |= ((y >> i) & 1) << (2 * i + 1)
-    return z
-
-
-def zorder_layout(
-    df: DataFrame,
-    x_col: str,
-    y_col: str,
-    n_partitions: int,
-    bits: int = 8,
-    x_mod: int | None = None,
-    y_mod: int | None = None,
-) -> DataFrame:
-    """Physically cluster ``df`` by the Morton code of (x_col, y_col):
-    range-partition on z (each output file owns a contiguous z range = a
-    small set of 2-D tiles) and sort within partitions (tight parquet
-    row-group min/max stats on both dims). ``x_mod``/``y_mod`` optionally
-    fold unbounded keys into the bits-bit grid. Write the result with
-    plain ``.write.parquet`` — the layout, not the writer, is the point."""
-    xs = F.col(x_col) % x_mod if x_mod else F.col(x_col)
-    ys = F.col(y_col) % y_mod if y_mod else F.col(y_col)
-    z = z_value(xs, ys, bits=bits)
-    return (
-        df.withColumn("__z", z)
-        .repartitionByRange(n_partitions, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-    )

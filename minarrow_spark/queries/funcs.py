@@ -496,9 +496,9 @@ def q24_agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def within(approx, exact, tol: float = 0.10):
+    def within(approx, exact):  # an HLL estimate within 10% of the exact count
         return F.abs(approx.cast("double") - exact.cast("double")) <= (
-            tol * exact.cast("double")
+            0.10 * exact.cast("double")
         )
 
     # Count-min sketch tier (operators/sketch.py): per-returnflag 4×256

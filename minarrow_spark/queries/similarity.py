@@ -325,6 +325,8 @@ def q38b_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     from minarrow_spark.operators.similarity import (
+        PQ_CELL_BITS,
+        PQ_M,
         pq_adc_lut,
         pq_cell_keys,
         pq_centroids,
@@ -342,10 +344,13 @@ def q38b_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qids = sorted({k[0] for k in lut})
     score_arrays = {
         (q, s): F.array(
-            *[F.lit(lut.get((q, s, c), 0)).cast("long") for c in range(4)]
+            *[
+                F.lit(lut.get((q, s, c), 0)).cast("long")
+                for c in range(1 << PQ_CELL_BITS)
+            ]
         )
         for q in qids
-        for s in range(8)
+        for s in range(PQ_M)
     }
 
     def _adc_score(q):
@@ -353,7 +358,7 @@ def q38b_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.element_at(
                 score_arrays[(q, s)], F.element_at(F.col("_pqc"), s + 1) + 1
             )
-            for s in range(8)
+            for s in range(PQ_M)
         ]
         total = terms[0]
         for t in terms[1:]:
@@ -540,6 +545,9 @@ def q40_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+Q39_MAX_ROWS = 50_000  # q39's all-pairs row guard
+
+
 @query(
     "q39_similar_pairs",
     oracle=f"""
@@ -558,17 +566,15 @@ def q40_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("similarity", "near-dup"),
 )
-def q39_similar_pairs(
-    spark: SparkSession, sf_dir: str, max_rows: int = 50_000
-) -> DataFrame:
+def q39_similar_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 most-similar embedding pairs corpus-wide (exact all-pairs —
     the oracle/verification tier; the LSH tier below is the scale path).
 
     GUARDED: this is deliberately the registry's one quadratic form (it
     exists to label/verify the approximate tiers), and it broadcasts the
-    full corpus side — so it refuses to run past ``max_rows`` rather than
-    melting at scale. The default 50k ≈ 1.25G pair-sims keeps a labeled
-    verification run in the ~1-minute class; the earlier 250k default was
+    full corpus side — so it refuses to run past ``Q39_MAX_ROWS`` rather
+    than melting at scale. 50k ≈ 1.25G pair-sims keeps a labeled
+    verification run in the ~1-minute class; the earlier 250k limit was
     measured too permissive — 200k vectors (20G pairs) exceeded 10 min
     per run on 32 threads at the 100× sweep point. Past the guard, use
     q39b_lsh_buckets (banded sign-LSH, linear-ish) or q40's cell
@@ -584,10 +590,10 @@ def q39_similar_pairs(
 
     e = par(T(spark, sf_dir, "embeddings"))
     n = e.count()  # metadata-cheap on parquet; NOT row data collection
-    if n > max_rows:
+    if n > Q39_MAX_ROWS:
         raise ValueError(
             f"q39_similar_pairs is the labeled O(n²) verification tier; corpus "
-            f"has {n} rows > max_rows={max_rows}. Use q39b_lsh_buckets "
+            f"has {n} rows > {Q39_MAX_ROWS}. Use q39b_lsh_buckets "
             f"(banded LSH) or cell_blocked_pairs (q40) at this scale."
         )
     a = e.select(

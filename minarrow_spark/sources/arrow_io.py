@@ -142,20 +142,6 @@ def from_arrow(spark: SparkSession, data: pa.Table | pa.RecordBatch) -> DataFram
     return df
 
 
-def from_arrow_batches(
-    spark: SparkSession, batches: "Iterator[pa.RecordBatch] | list[pa.RecordBatch]"
-) -> DataFrame:
-    """RecordBatch stream → DataFrame (the import direction of the
-    reference's stream FFI, `arrow_c_ffi.rs:2415,2550`): drains the
-    iterator into one Arrow table and imports through the same
-    normalization policy as ``from_arrow``. Ingesting into a distributed
-    engine necessarily materializes the stream driver-side before the
-    parallelize — for unbounded streams use Structured Streaming sources
-    (minarrow_spark.streaming), not this boundary API."""
-    tbl = pa.Table.from_batches(list(batches))
-    return from_arrow(spark, tbl)
-
-
 def to_arrow(df: DataFrame) -> pa.Table:
     """DataFrame → Arrow table at the driver (reference `export_to_c`)."""
     return df.toArrow()
@@ -258,25 +244,6 @@ def to_matrix(df: DataFrame, cols: list[str] | None = None):
             for c in cols
         ]
     )
-
-
-def from_matrix(
-    spark: SparkSession, mat, names: list[str] | None = None
-) -> DataFrame:
-    """numpy 2-D matrix → DataFrame, one column per matrix column, via the
-    Arrow import path — the reference's Matrix→Table cast
-    (`src/structs/matrix.rs:484,827` `from_matrix` / `From<Matrix>`).
-    Column names default to c0..c{n-1}."""
-    import numpy as np
-
-    mat = np.asarray(mat)
-    if mat.ndim != 2:
-        raise ValueError(f"expected a 2-D matrix, got shape {mat.shape}")
-    names = names or [f"c{i}" for i in range(mat.shape[1])]
-    if len(names) != mat.shape[1]:
-        raise ValueError(f"{len(names)} names for {mat.shape[1]} columns")
-    tbl = pa.table({n: pa.array(mat[:, i]) for i, n in enumerate(names)})
-    return from_arrow(spark, tbl)
 
 
 def map_in_arrow(

@@ -35,9 +35,6 @@ TABLES: tuple[str, ...] = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at any realistic scale factor.
-BROADCAST_TABLES: frozenset[str] = frozenset({"region", "nation", "supplier"})
-
 # Post-load schema contract (r6 verdict task 7): driver-regenerated testdata
 # has flipped parquet timestamp physical types twice (TIMESTAMP_NANOS →
 # µs-NTZ); load_table normalizes the known variants SILENTLY, so a future

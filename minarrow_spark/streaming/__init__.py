@@ -24,9 +24,7 @@ from minarrow_spark.streaming.rollup import (
 )
 from minarrow_spark.streaming.windows import (
     dedup_within_watermark,
-    hopping_counts,
     running_totals_per_user,
-    session_stats,
     stream_pair_join,
     windowed_counts,
 )
@@ -38,8 +36,6 @@ __all__ = [
     "ann_batch_twin", "ann_neighbors", "streaming_ann",
     "compact_rollup", "continuous_rollup", "rollup_batch_twin", "rollup_view",
     "rollup_writer",
-    "dedup_within_watermark", "hopping_counts", "running_totals_per_user",
-    "session_stats",
-    "stream_pair_join",
+    "dedup_within_watermark", "running_totals_per_user", "stream_pair_join",
     "windowed_counts",
 ]

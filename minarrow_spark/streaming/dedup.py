@@ -38,20 +38,12 @@ beyond-reference extension in the dedup family (SURVEY §2 extensions).
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from minarrow_spark.operators.dedup import (
-    K,
-    _band_keys,
-    _signature,
-    shingles,
-    simhash,
-    simhash_width_auto,
-)
+from minarrow_spark.operators.dedup import K, _band_keys, _signature, shingles
 from minarrow_spark.streaming.rollup import prior_batches
 
 # At-rest schemas, exactly what ``dedup_writer`` writes (pinned against it
@@ -81,134 +73,15 @@ def band_rows(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def simhash_band_rows(
-    docs: DataFrame,
-    text_col: str = "text",
-    width: int = 32,
-    bands: int = 4,
-) -> DataFrame:
-    """(doc_id, band_id, band_key) rows from the ``width``-bit simhash —
-    the batch operator's exact banding (``operators/dedup.
-    simhash_hamming_pairs``: equal band-width slices of one long), keyed
-    into the SAME state schema the minhash tier uses (band_key string, so
-    one state reader serves both methods)."""
-    if width % bands:
-        raise ValueError(f"width={width} not divisible by bands={bands}")
-    w = width // bands
-    mask = (1 << w) - 1
-    sig = simhash(docs.select("doc_id", text_col), text_col, bits=width)
-    return (
-        sig.select(
-            "doc_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band_id"),
-                            F.shiftright("simhash", b * w)
-                            .bitwiseAND(F.lit(mask).cast("long"))
-                            .cast("string")
-                            .alias("band_key"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("b"),
-        )
-        .select("doc_id", "b.band_id", "b.band_key")
-        .filter(F.col("band_key").isNotNull())  # token-less docs have no signature
-    )
-
-
-def _resolve_width(
-    state_dir: str,
-    batch: DataFrame,
-    width: int | str,
-    text_col: str,
-    collision_budget: int = 100,
-) -> int:
-    """Resolve ``width`` for a state lineage. ``'auto'`` applies the batch
-    operator's corpus-stats rule (``simhash_width_auto``) to the FIRST
-    batch and PERSISTS the choice in ``state_dir/_WIDTH.json``: band keys
-    from different widths never collide coherently, so one state directory
-    must speak exactly one width — later batches and checkpoint restarts
-    read the pinned choice instead of re-deciding. The pin is written AND
-    enforced for explicit widths too: reopening an existing lineage with a
-    different concrete width would silently mix incoherent band keys
-    across batches (missed duplicates), so it raises instead."""
-    path = os.path.join(state_dir, "_WIDTH.json")
-    pinned = None
-    if os.path.exists(path):
-        with open(path) as fh:
-            pinned = int(json.load(fh)["width"])
-    if width != "auto":
-        bits = int(width)
-        if pinned is not None and pinned != bits:
-            raise ValueError(
-                f"state lineage {state_dir!r} is pinned to width {pinned}; "
-                f"reopening it with width={bits} would mix incoherent band "
-                f"keys across batches (one state dir speaks one width)"
-            )
-        if pinned is None:
-            os.makedirs(state_dir, exist_ok=True)
-            with open(path, "w") as fh:
-                json.dump({"width": bits, "source": "explicit"}, fh)
-        return bits
-    if pinned is not None:
-        return pinned
-    from minarrow_spark._sql import ident
-    from minarrow_spark.functions.text import token_count_sql
-
-    stats = batch.agg(
-        F.approx_count_distinct(F.md5(F.col(text_col))).alias("n"),
-        F.percentile_approx(
-            F.expr(token_count_sql(ident(text_col))), F.lit(0.5)
-        ).alias("med"),
-    ).collect()[0]
-    bits, _bands = simhash_width_auto(
-        int(stats["n"]), float(stats["med"] or 0), collision_budget
-    )
-    os.makedirs(state_dir, exist_ok=True)
-    with open(path, "w") as fh:
-        json.dump(
-            {
-                "width": bits,
-                "distinct_n": int(stats["n"]),
-                "median_tokens": float(stats["med"] or 0),
-            },
-            fh,
-        )
-    return bits
-
-
-def dedup_writer(
-    state_dir: str,
-    out_dir: str,
-    text_col: str = "text",
-    method: str = "minhash",
-    width: int | str = 32,
-):
+def dedup_writer(state_dir: str, out_dir: str, text_col: str = "text"):
     """foreachBatch callback: verdicts to ``out_dir/batch=<id>``, this
     batch's (band_key → first doc) rows to ``state_dir/batch=<id>`` — both
-    overwritten on replay of the same batch id (idempotent).
-
-    ``method='simhash'`` keys the state with simhash bands instead of
-    minhash bands, tracking the batch operator's config surface (r6 task
-    8): ``width`` is 32, 64, or ``'auto'`` — auto resolves once per state
-    lineage via ``_resolve_width`` and stays pinned across batches and
-    restarts."""
-    if method not in ("minhash", "simhash"):
-        raise ValueError(f"method must be 'minhash' or 'simhash', got {method!r}")
+    overwritten on replay of the same batch id (idempotent)."""
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        if method == "simhash":
-            bits = _resolve_width(state_dir, batch, width, text_col)
-            keys = simhash_band_rows(batch, text_col, width=bits)
-        else:
-            keys = band_rows(batch, text_col)
         # reused by probe, within-batch min, and the state write → one compute
-        keys = keys.localCheckpoint(eager=True)
+        keys = band_rows(batch, text_col).localCheckpoint(eager=True)
         batch_first = keys.groupBy("band_id", "band_key").agg(
             F.min("doc_id").alias("first_id")
         )
@@ -257,17 +130,13 @@ def dedup_writer(
 
 
 def streaming_dedup(
-    docs_stream: DataFrame,
-    state_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    **kw,
+    docs_stream: DataFrame, state_dir: str, out_dir: str, checkpoint_dir: str
 ):
     """Start the incremental dedup stream (availableNow: drain what exists,
     then stop — a live cluster uses a processingTime trigger). Returns the
     StreamingQuery handle."""
     return (
-        docs_stream.writeStream.foreachBatch(dedup_writer(state_dir, out_dir, **kw))
+        docs_stream.writeStream.foreachBatch(dedup_writer(state_dir, out_dir))
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
@@ -303,29 +172,14 @@ def compact_state(spark: SparkSession, state_dir: str, out_dir: str) -> DataFram
         .agg(F.min("first_id").alias("first_id"))
     )
     compacted.write.mode("overwrite").parquet(os.path.join(out_dir, "batch=-1"))
-    src_pin = os.path.join(state_dir, "_WIDTH.json")
-    if os.path.exists(src_pin):  # carry the simhash width pin with the state
-        import shutil
-
-        shutil.copy(src_pin, os.path.join(out_dir, "_WIDTH.json"))
     return compacted
 
 
-def batch_twin(
-    docs: DataFrame,
-    text_col: str = "text",
-    method: str = "minhash",
-    width: int = 32,
-) -> DataFrame:
+def batch_twin(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """One-shot recomputation of the same verdicts (backfills/equivalence
     tests): a doc is a duplicate iff a lower-id doc shares any band key —
-    exactly the streamed outcome when arrival order follows doc_id.
-    ``method``/``width`` mirror ``dedup_writer`` (width must be concrete
-    here — a one-shot twin has no state lineage to pin 'auto' to)."""
-    if method == "simhash":
-        keys = simhash_band_rows(docs, text_col, width=int(width))
-    else:
-        keys = band_rows(docs, text_col)
+    exactly the streamed outcome when arrival order follows doc_id."""
+    keys = band_rows(docs, text_col)
     first = keys.groupBy("band_id", "band_key").agg(F.min("doc_id").alias("first_id"))
     dups = (
         keys.join(first, ["band_id", "band_key"])

@@ -26,6 +26,8 @@ from pyspark.sql import functions as F
 
 from minarrow_spark.sources.catalog import _path_sig, load_table
 
+FILES_PER_TRIGGER = 1  # one replay chunk per micro-batch
+
 
 def replay_dir(
     spark: SparkSession, sf_dir: str, n_chunks: int = 8, base_dir: str | None = None
@@ -72,11 +74,9 @@ def replay_frame_dir(
 _SCHEMA_MEMO: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
-def read_event_stream(
-    spark: SparkSession, replay_path: str, files_per_trigger: int = 1
-) -> DataFrame:
+def read_event_stream(spark: SparkSession, replay_path: str) -> DataFrame:
     """readStream over the replay directory — micro-batch ingestion with
-    Count-style rechunk policy (files per trigger). The schema is inferred
+    Count-style rechunk policy (``FILES_PER_TRIGGER``). The schema is inferred
     from ``chunk=0000`` once per directory and session (one Spark job),
     then memoised until that chunk is rewritten; chunks of one directory
     must share it."""
@@ -88,7 +88,7 @@ def read_event_stream(
         schema = memo[key] = spark.read.parquet(first).schema
     return (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
+        .option("maxFilesPerTrigger", FILES_PER_TRIGGER)
         .option("recursiveFileLookup", "true")
         .parquet(replay_path)
     )

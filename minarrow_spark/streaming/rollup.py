@@ -142,9 +142,9 @@ def prior_batches(
     ``before_batch``, read with their declared ``schema`` (the state tables
     of streaming/dedup.py and streaming/ann.py: a replayed batch must not
     probe its own earlier attempt). An empty frame when no partial exists
-    yet: the directory is missing or holds only side files such as a
-    ``_WIDTH.json`` pin. A partial that cannot be read fails the action
-    that scans it; it is never taken for an empty state."""
+    yet: the directory is missing or holds no ``batch=*`` entry. A partial
+    that cannot be read fails the action that scans it; it is never taken
+    for an empty state."""
     if not os.path.isdir(lsm_dir) or not any(
         name.startswith("batch=") for name in os.listdir(lsm_dir)
     ):

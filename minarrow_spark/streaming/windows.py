@@ -122,47 +122,3 @@ def stream_pair_join(
         F.col("a.event_id").alias("eid_a"),
         F.col("b.event_id").alias("eid_b"),
     )
-
-
-def session_stats(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "10 minutes"
-) -> DataFrame:
-    """Native session windows (``F.session_window``) — the Spark-idiomatic
-    gap-based sessionization. Same 30-min-inactivity semantics as the
-    batch tier's manual lag→flag→cumsum form (q47), expressed as a single
-    grouped aggregation the engine maintains incrementally under a
-    watermark: state is per OPEN session and closed sessions are evicted —
-    bounded memory on an unbounded stream, with no window-function shuffle
-    at all. Works identically on a batch DataFrame (the watermark is a
-    no-op there), which is what the equivalence test exploits."""
-    stream = events.withWatermark("ts", watermark) if events.isStreaming else events
-    return (
-        stream.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.unix_timestamp(F.col("w.start")).cast("bigint").alias("session_start"),
-            "n_events",
-        )
-    )
-
-
-def hopping_counts(
-    events: DataFrame, watermark: str = "10 minutes"
-) -> DataFrame:
-    """Sliding 30-min windows every 10 min under a watermark — the streaming
-    twin of q46_hopping_window (each event lands in 3 windows; state for
-    windows past the watermark is evicted)."""
-    stream = events.withWatermark("ts", watermark) if events.isStreaming else events
-    return (
-        stream.groupBy(F.window("ts", "30 minutes", "10 minutes").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(dec("value")).cast("double").alias("total_value"),
-        )
-        .select(
-            F.unix_timestamp(F.col("w.start")).cast("bigint").alias("window_start"),
-            "n",
-            "total_value",
-        )
-    )

@@ -98,7 +98,7 @@ def main() -> None:
         ("int8 embedding quantization (coarse search + exact re-rank)", "quantization"),
         ("text normalization (Catalyst cleanup + Arrow NFC)", "normalize"),
         ("continuous rollup (partials / compaction / merge-on-read)", "rollup"),
-        ("k-means clustering + balanced sampling", "clustering"),
+        ("k-means clustering", "clustering"),
         ("exact-gramian PCA (power iteration, bit-checked cross-engine)", "pca"),
         ("BPE vocabulary training (histogram shuffle + replayed merge loop)", "bpe"),
         ("fuzzy (edit-distance) entity-resolution join, prefix-blocked", "fuzzy"),

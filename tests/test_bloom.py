@@ -1,6 +1,7 @@
 """Bloom semi-join pre-filter: no false negatives, useful prune rate,
-exact equivalence with the plain semi-join, and a DuckDB replay of the
-filter bits (the md5 construction is engine-portable)."""
+exact equivalence of the pruned semi-join with the plain one, NDV sizing
+and refusal, and a DuckDB replay of the filter bits (the md5
+construction is engine-portable)."""
 
 from __future__ import annotations
 
@@ -12,7 +13,6 @@ from minarrow_spark.operators.bloom import (
     bloom_build,
     bloom_build_auto,
     bloom_might_contain,
-    bloom_semi_join,
 )
 
 
@@ -36,8 +36,13 @@ def test_no_false_negatives_and_prune_rate(spark, tables):
 
 
 def test_semi_join_equivalence(spark, tables):
+    """q06's shape: the Bloom prune plus the exact semi-join returns the
+    plain semi-join's rows (no false negatives; the join drops the false
+    positives)."""
     dim, fact = tables
-    got = sorted(r["id"] for r in bloom_semi_join(fact, dim, "k").collect())
+    words = bloom_build(dim, "k")
+    pruned = fact.filter(bloom_might_contain(F.col("k"), words))
+    got = sorted(r["id"] for r in pruned.join(dim, "k", "left_semi").collect())
     want = sorted(r["id"] for r in fact.join(dim, "k", "left_semi").collect())
     assert got == want and got
 
@@ -57,14 +62,10 @@ def test_auto_sizes_from_ndv(spark, tables):
 
 
 def test_auto_refuses_on_saturating_ndv(spark):
-    # 1M distinct keys × 10 bits ≫ max_bits → refusal, not a useless filter
+    # 1M distinct keys × 10 bits ≫ MAX_BITS → refusal, not a useless filter
+    # (q06 then runs the plain semi-join: a refusal builds no filter)
     big = spark.range(0, 1_000_000).select(F.col("id").alias("k"))
     assert bloom_build_auto(big, "k") is None
-    # bloom_semi_join stays exact through the refusal path
-    fact = spark.range(0, 5000).select((F.col("id") * 400).alias("k"), "id")
-    got = sorted(r["id"] for r in bloom_semi_join(fact, big, "k").collect())
-    want = sorted(r["id"] for r in fact.join(big, "k", "left_semi").collect())
-    assert got == want and got
 
 
 def test_auto_refuses_on_non_selective_dim(spark, tables):

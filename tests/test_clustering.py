@@ -6,18 +6,29 @@ DuckDB oracles, for an op whose iterative shape doesn't fit one SQL string.
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
 import pyarrow.parquet as pq
 import pytest
 
-from minarrow_spark.operators.clustering import (
-    cluster_balanced_sample,
-    exact_mean,
-    kmeans_assign,
-    kmeans_fit,
-)
+from minarrow_spark.operators.clustering import kmeans_assign, kmeans_fit
 from tests.conftest import SF_SMALL
 
 K, ITERS = 4, 2
+
+
+def exact_mean(values, scale: int = 9) -> float:
+    """The update step's arithmetic: each double x rounds as
+    round(x·10^scale) HALF_UP on the double product (Spark's F.round on
+    DOUBLE — HALF_UP over the shortest decimal repr, which coincides with
+    round-half-away on the binary value), the integer scaled sum S is
+    exact, and the mean is the IEEE chain (S/n)/10^scale."""
+    m = 10**scale
+    s = sum(
+        int(Decimal(repr(float(x) * m)).quantize(Decimal(1), ROUND_HALF_UP))
+        for x in values
+    )
+    return (float(s) / len(values)) / float(m)
 
 
 def _ref_fit(ids, vecs, k=K, iters=ITERS):
@@ -88,24 +99,3 @@ def test_assign_is_shuffle_free(emb):
     assigned = kmeans_assign(df, [list(v) for v in vecs[:K]])
     plan = assigned._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
-
-
-def test_cluster_balanced_sample(emb):
-    df, _, vecs = emb
-    assigned = kmeans_assign(df, [list(v) for v in vecs[:K]])
-    samp = cluster_balanced_sample(assigned, per_cluster=5)
-    sizes = {
-        r["cluster"]: r["count"]
-        for r in samp.groupBy("cluster").count().collect()
-    }
-    full = {
-        r["cluster"]: r["count"]
-        for r in assigned.groupBy("cluster").count().collect()
-    }
-    for ci, n in full.items():
-        assert sizes.get(ci, 0) == min(5, n)
-    # deterministic: same sample on a different partitioning
-    samp2 = cluster_balanced_sample(assigned.repartition(5), per_cluster=5)
-    assert sorted(r["vec_id"] for r in samp.collect()) == sorted(
-        r["vec_id"] for r in samp2.collect()
-    )

@@ -13,7 +13,7 @@ from minarrow_spark.operators.dedup import (
     simhash,
 )
 from minarrow_spark.operators.joins import asof_join
-from minarrow_spark.operators.sampling import hash_sample, train_test_split
+from minarrow_spark.operators.sampling import train_test_split
 from minarrow_spark.operators.similarity import brute_force_topk
 from minarrow_spark.sources.catalog import load_table
 
@@ -34,7 +34,6 @@ def test_dedup_operators_empty(spark, sf_dir):
 
 def test_sampling_empty(spark, sf_dir):
     o = _empty(load_table(spark, sf_dir, "orders"))
-    assert hash_sample(o, "o_orderkey", 0.5).count() == 0
     s = train_test_split(o, "o_orderkey", test=0.2, val=0.1)
     assert s.count() == 0 and "split" in s.columns
 

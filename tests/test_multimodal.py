@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 from minarrow_spark.operators.multimodal import (
     decode_image_real,
     extract_features,
-    resize_stub,
     synthesize_media,
 )
 from minarrow_spark.sources.catalog import load_table
@@ -43,8 +42,7 @@ def test_real_decode_local():
 @pytest.mark.skipif(not HAS_PIL, reason="Pillow not installed in this container")
 def test_real_decode_distributed(spark):
     """The real codec through the same mapInPandas plumbing the fake tier
-    uses: true width/height/mean land in the feature columns, and the
-    real resize re-encodes payloads that decode at the target dims."""
+    uses: true width/height/mean land in the feature columns."""
     rows = [(i, _png_bytes(8 + i, 5 + i, 10 * i), "image/png", None, None)
             for i in range(1, 5)]
     media = spark.createDataFrame(
@@ -55,18 +53,6 @@ def test_real_decode_distributed(spark):
     for i in range(1, 5):
         assert (feats[i].fake_width, feats[i].fake_height,
                 feats[i].fake_mean_px) == (8 + i, 5 + i, float(10 * i))
-    resized = resize_stub(media, 4, 3, decoder="real").collect()
-    assert all(decode_image_real(bytes(r.payload))[:2] == (4, 3) for r in resized)
-
-
-def test_resize_plumbing(spark, sf_dir):
-    media = synthesize_media(load_table(spark, sf_dir, "documents")).limit(20)
-    out = resize_stub(media, 224, 224)
-    rows = out.collect()
-    assert len(rows) == 20
-    assert all(r.target_width == 224 and r.target_height == 224 for r in rows)
-    # payload passes through the Python worker unchanged
-    assert all(r.payload is not None for r in rows)
 
 
 def test_features_match_expressions(spark, sf_dir):

@@ -7,12 +7,63 @@ broadcast, shuffle counts don't silently regress, codegen covers the plan.
 
 from __future__ import annotations
 
-import pytest
+import re
+from dataclasses import dataclass
 
-from minarrow_spark.plans import plan_summary
+import pytest
+from pyspark.sql import DataFrame
+
+from minarrow_spark.plans.inspect import _executed_plan, count_exchanges
 from minarrow_spark.registry import all_queries
 
 QUERIES = all_queries()
+
+
+def _formatted(df: DataFrame) -> str:
+    jvm = df.sparkSession._jvm
+    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    return df._jdf.queryExecution().explainString(mode)
+
+
+def pushed_filters(df: DataFrame) -> list[str]:
+    """PushedFilters lists per parquet scan (empty string → nothing pushed)."""
+    return re.findall(r"PushedFilters: \[([^\]]*)\]", _formatted(df))
+
+
+def read_schemas(df: DataFrame) -> list[str]:
+    """ReadSchema per parquet scan — verifies column pruning reached the scan."""
+    return re.findall(r"ReadSchema: (struct<[^\n]*)", _formatted(df))
+
+
+@dataclass(frozen=True)
+class PlanSummary:
+    shuffles: int
+    broadcasts: int
+    pushed_filters: list[str]
+    read_schemas: list[str]
+    wholestage_codegen_spans: int
+
+
+def plan_summary(df: DataFrame, execute: bool = False) -> PlanSummary:
+    """One-call audit of the properties SCALE.md tracks per query.
+
+    With AQE the codegen layout only exists once the adaptive plan is final,
+    and only *this df's own* action finalizes its plan (a writer executes a
+    copy), so ``execute=True`` collects the result first — intended for
+    test/audit tiers where results are small. The static properties
+    (pushdown, schemas, exchange counts) never need execution."""
+    if execute:
+        df.collect()
+    plan = _executed_plan(df)
+    shuffles, broadcasts = count_exchanges(df)
+    codegen = len(set(re.findall(r"\*\((\d+)\)", plan)))
+    return PlanSummary(
+        shuffles=shuffles,
+        broadcasts=broadcasts,
+        pushed_filters=pushed_filters(df),
+        read_schemas=read_schemas(df),
+        wholestage_codegen_spans=codegen,
+    )
 
 
 def _summary(spark, sf_dir, name):
@@ -66,8 +117,6 @@ def test_global_plan_contracts(spark, sf_dir):
       reuse executes it once — such queries carry an explicit allowance
       here rather than a raised global bar.
     """
-    from minarrow_spark.plans.inspect import _executed_plan
-
     # static-node allowances for shared-unmaterialized-exchange plans
     # q24 (r7): the main agg split into declarative + sketch tiers plus the
     # ~150-row quantity-histogram percentile adds exchanges that carry 3-150
@@ -168,8 +217,6 @@ def test_q34_single_corpus_scan(spark, sf_dir):
     documents parquet exactly ONCE (the old 5-branch union re-scanned it
     per augmentation branch — %-filters cannot prune row groups, so each
     branch was a full scan paid by both tiers; 13.2 -> 7.1 s at 100x)."""
-    from minarrow_spark.plans.inspect import _executed_plan
-
     df = QUERIES["q34_dedup_exact"].fn(spark, sf_dir)
     plan = _executed_plan(df)
     assert plan.count("documents.parquet") == 1, plan.count("documents.parquet")

@@ -7,9 +7,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from minarrow_spark.operators.sampling import (
-    hash_sample,
     hex_threshold,
-    stratified_hash_sample,
+    sample_mask,
     train_test_split,
 )
 from minarrow_spark.sources.catalog import load_table
@@ -21,16 +20,20 @@ def test_hex_threshold_bounds():
     assert hex_threshold(0.5) == "80000000"
 
 
+def _sample(df, key, fraction, salt=""):
+    return df.filter(sample_mask(F.col(key), fraction, salt))
+
+
 def test_hash_sample_deterministic_and_sized(spark, sf_dir):
     o = load_table(spark, sf_dir, "orders")
-    s1 = hash_sample(o, "o_orderkey", 0.2)
-    s2 = hash_sample(o, "o_orderkey", 0.2)
+    s1 = _sample(o, "o_orderkey", 0.2)
+    s2 = _sample(o, "o_orderkey", 0.2)
     assert s1.count() == s2.count()
     assert s1.exceptAll(s2).count() == 0  # identical rows, not just counts
     frac = s1.count() / o.count()
     assert 0.15 < frac < 0.25, frac
     # independent salt → different (but equally sized-ish) sample
-    s3 = hash_sample(o, "o_orderkey", 0.2, salt="other")
+    s3 = _sample(o, "o_orderkey", 0.2, salt="other")
     assert s3.exceptAll(s1).count() > 0
 
 
@@ -38,8 +41,8 @@ def test_hash_sample_aligns_across_tables(spark, sf_dir):
     """Sampling orders and lineitem by the SAME key keeps them joinable:
     every sampled lineitem's order is in the sampled orders — the property
     that makes hash sampling the 100 TB tool."""
-    o = hash_sample(load_table(spark, sf_dir, "orders"), "o_orderkey", 0.1)
-    l = hash_sample(
+    o = _sample(load_table(spark, sf_dir, "orders"), "o_orderkey", 0.1)
+    l = _sample(
         load_table(spark, sf_dir, "lineitem").withColumnRenamed(
             "l_orderkey", "o_orderkey"
         ),
@@ -48,25 +51,6 @@ def test_hash_sample_aligns_across_tables(spark, sf_dir):
     )
     orphans = l.join(o, "o_orderkey", "left_anti")
     assert orphans.count() == 0
-
-
-def test_stratified_fractions(spark, sf_dir):
-    d = load_table(spark, sf_dir, "documents")
-    sources = [r.source for r in d.select("source").distinct().collect()]
-    keep_all, keep_none = sources[0], sources[1]
-    s = stratified_hash_sample(
-        d, key="doc_id", strata="source",
-        fractions={keep_all: 1.0, keep_none: 0.0}, default=0.5,
-    )
-    per = {r.source: r.n for r in s.groupBy("source").agg(F.count("*").alias("n")).collect()}
-    base = {r.source: r.n for r in d.groupBy("source").agg(F.count("*").alias("n")).collect()}
-    assert per.get(keep_all) == base[keep_all]
-    assert keep_none not in per
-    # default-rate strata: assert the aggregate (per-stratum n is tiny at
-    # test SF, binomial noise would flake a per-stratum bound)
-    kept = sum(per.get(s, 0) for s in sources[2:])
-    total = sum(base[s] for s in sources[2:])
-    assert 0.38 * total < kept < 0.62 * total, (kept, total)
 
 
 def test_train_test_split_disjoint_exhaustive(spark, sf_dir):
@@ -78,25 +62,6 @@ def test_train_test_split_disjoint_exhaustive(spark, sf_dir):
     # deterministic: rerun assigns identical splits
     s2 = train_test_split(c, "c_custkey", test=0.2, val=0.1)
     assert s.exceptAll(s2).count() == 0
-
-
-def test_epoch_shuffle_deterministic_and_epoch_sensitive(spark, sf_dir):
-    """Same epoch → identical global order on reruns and partitionings;
-    different epoch → different order; always the same multiset of rows."""
-    from minarrow_spark.operators.sampling import epoch_shuffle
-
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey").limit(2000)
-
-    def order(df, epoch, parts):
-        laid = epoch_shuffle(df, "o_orderkey", epoch, n_partitions=parts)
-        return [r.o_orderkey for r in laid.toLocalIterator()]
-
-    e1a = order(o, 1, 4)
-    e1b = order(o.repartition(13), 1, 8)
-    e2 = order(o, 2, 4)
-    assert e1a == e1b                      # partition-layout independent
-    assert e1a != e2                       # epochs reshuffle
-    assert sorted(e1a) == sorted(e2)       # same rows, only order moves
 
 
 def test_weighted_sample_topk_deterministic_and_cross_engine(spark):

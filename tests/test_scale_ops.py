@@ -1,47 +1,19 @@
-"""Scale-layout operators: bucketed shuffle-free joins and skew salting.
+"""Scale-layout operators and their plan/result contracts.
 
-The bucketing test asserts on the *plan* (no Exchange on either join side),
-not just the result — the layout exists to delete shuffles, so the plan is
-the contract. Salting tests assert exact result equality with the unsalted
-form: salt must never change semantics.
+The salting test asserts exact result equality with the unsalted form:
+salt must never change semantics.
 """
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from minarrow_spark.operators.skew import salted_agg, salted_join
-from minarrow_spark.sources.bucketing import read_table, write_bucketed
+from minarrow_spark.operators.skew import salted_agg
 from minarrow_spark.sources.catalog import load_table
 
 
 def _canon(df):
     return sorted(tuple(r) for r in df.collect())
-
-
-def test_bucketed_join_has_no_shuffle(spark, sf_dir):
-    # managed tables land in the default warehouse dir; DROP TABLE below
-    # removes the files (spark-warehouse/ is gitignored for safety)
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
-    l = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    write_bucketed(o, "b_orders", "o_orderkey", n_buckets=4)
-    write_bucketed(l, "b_lineitem", "l_orderkey", n_buckets=4)
-    bo, bl = read_table(spark, "b_orders"), read_table(spark, "b_lineitem")
-    # disable broadcast so the join would otherwise need a full shuffle
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = bl.join(bo, bl.l_orderkey == bo.o_orderkey)
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in plan, plan
-        # and it computes the same thing as the unbucketed join
-        plain = l.join(o, l.l_orderkey == o.o_orderkey)
-        assert joined.count() == plain.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
 
 def test_salted_agg_matches_plain(spark, sf_dir):
@@ -66,40 +38,6 @@ def test_salted_agg_matches_plain(spark, sf_dir):
         F.sum(dec("l_quantity")).cast("double").alias("total_qty"),
     )
     assert _canon(salted) == _canon(plain)
-
-
-def test_salted_join_matches_plain(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    salted = salted_join(
-        o.withColumnRenamed("o_custkey", "c_custkey"), c, "c_custkey", n_salts=8
-    )
-    plain = o.join(c, o.o_custkey == c.c_custkey).select(
-        "c_custkey", "o_orderkey", "c_mktsegment"
-    )
-    assert salted.count() == plain.count()
-    assert _canon(salted.select("o_orderkey", "c_mktsegment")) == _canon(
-        plain.select("o_orderkey", "c_mktsegment")
-    )
-
-
-def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
-    from minarrow_spark.sources.bucketing import write_partitioned
-
-    l = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_quantity", "l_returnflag"
-    )
-    path = str(tmp_path / "lineitem_by_flag")
-    write_partitioned(l, path, "l_returnflag")
-    back = spark.read.parquet(path)
-    pruned = back.filter(F.col("l_returnflag") == "A")
-    # the contract: the predicate lands in PartitionFilters (directory-level
-    # pruning before any IO), not in the data-filter list
-    formatted = pruned._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    assert "PartitionFilters: [isnotnull(l_returnflag" in formatted, formatted
-    assert pruned.count() == l.filter(F.col("l_returnflag") == "A").count()
 
 
 def _composed_minhash(docs):
@@ -642,8 +580,19 @@ def test_redact_pii_roundtrip(spark):
 # --------------------------------------------------------------------------
 
 
+def z_py(x: int, y: int) -> int:
+    """Python reference Morton code (z_value's bit interleave)."""
+    from minarrow_spark.operators.zorder import Z_BITS
+
+    z = 0
+    for i in range(Z_BITS):
+        z |= ((x >> i) & 1) << (2 * i)
+        z |= ((y >> i) & 1) << (2 * i + 1)
+    return z
+
+
 def test_z_value_matches_reference(spark):
-    from minarrow_spark.operators.zorder import z_py, z_value
+    from minarrow_spark.operators.zorder import z_value
 
     rows = [(x, y) for x in (0, 1, 5, 37, 255) for y in (0, 2, 9, 128, 255)]
     df = spark.createDataFrame(rows, ["x", "y"])
@@ -660,18 +609,13 @@ def test_zorder_layout_locality(spark, sf_dir):
     one axis; z-ordered partitions must average well under that."""
     import statistics
 
-    from minarrow_spark.operators.zorder import zorder_layout
+    from minarrow_spark.operators.zorder import z_value
 
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    laid = zorder_layout(
-        o, "o_custkey", "o_orderkey", n_partitions=16, x_mod=256, y_mod=256
-    )
+    x, y = F.col("o_custkey") % 256, F.col("o_orderkey") % 256
+    laid = o.withColumn("z", z_value(x, y)).repartitionByRange(16, "z")
     parts = (
-        laid.select(
-            F.spark_partition_id().alias("p"),
-            (F.col("o_custkey") % 256).alias("x"),
-            (F.col("o_orderkey") % 256).alias("y"),
-        )
+        laid.select(F.spark_partition_id().alias("p"), x.alias("x"), y.alias("y"))
         .groupBy("p")
         .agg(
             (F.max("x") - F.min("x")).alias("xr"),

@@ -222,36 +222,6 @@ def test_brute_force_topk_quotes_column_names(spark):
     assert all(abs(g[1] - w[1]) < 1e-6 for g, w in zip(got, want)), got
 
 
-@settings(max_examples=25, deadline=None)
-@given(st.lists(st.tuples(BIGINTS, INTS), min_size=1, max_size=50))
-def test_checked_narrowing_cast(spark, pairs):
-    """Narrowing-cast policy (reference checked TryFrom,
-    `conversions.rs:80-1000`): out-of-range → null, in-range → identity.
-    Never a silent wraparound."""
-    from minarrow_spark.functions.arithmetic import checked_cast
-
-    rows = _eval_pairs(
-        spark,
-        pairs,
-        [
-            "a",
-            checked_cast(F.col("a"), "int").alias("i32"),
-            checked_cast(F.col("a"), "smallint").alias("i16"),
-            checked_cast(F.col("a"), "tinyint").alias("i8"),
-        ],
-    )
-    for r in rows:
-        for val, lo, hi in (
-            (r.i32, -(2**31), 2**31 - 1),
-            (r.i16, -(2**15), 2**15 - 1),
-            (r.i8, -(2**7), 2**7 - 1),
-        ):
-            if lo <= r.a <= hi:
-                assert val == r.a, (r.a, val)
-            else:
-                assert val is None, (r.a, val)
-
-
 @settings(max_examples=50, deadline=None)
 @given(
     st.floats(min_value=0.0, max_value=1.0, allow_nan=False),

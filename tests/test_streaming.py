@@ -282,64 +282,6 @@ def test_rollup_writer_handles_empty_batch(spark, sf_dir, replay, tmp_path):
     assert _canon(rollup_view(spark, rollup_dir)) == before
 
 
-def test_session_window_matches_batch_and_manual(spark, sf_dir, replay):
-    """Native F.session_window sessionization: streaming == batch, and the
-    per-user session event-counts agree with q47's manual lag/cumsum form
-    (same 30-min gap semantics, independent implementations)."""
-    from minarrow_spark.registry import all_queries
-    from minarrow_spark.streaming import session_stats
-
-    q = run_to_memory(
-        session_stats(read_event_stream(spark, replay)),
-        "sess_out",
-        output_mode="complete",
-    )
-    try:
-        streamed = spark.sql("SELECT * FROM sess_out")
-        batch = session_stats(load_table(spark, sf_dir, "events"))
-        assert _canon(streamed) == _canon(batch)
-
-        # Cross-check against the manual form: ordinal sessions per user
-        # must carry identical event counts.
-        manual = all_queries()["q47_sessionization"].fn(spark, sf_dir)
-        a = sorted(
-            (r.user_id, r.session_id, r.n_events)
-            for r in manual.select("user_id", "session_id", "n_events").collect()
-        )
-        from pyspark.sql import Window as W
-
-        ranked = batch.withColumn(
-            "session_id",
-            F.row_number().over(
-                W.partitionBy("user_id").orderBy("session_start")
-            ),
-        )
-        b = sorted(
-            (r.user_id, r.session_id, r.n_events)
-            for r in ranked.select("user_id", "session_id", "n_events").collect()
-        )
-        assert a == b
-    finally:
-        q.stop()
-
-
-def test_hopping_counts_matches_batch(spark, sf_dir, replay):
-    """Sliding-window streaming twin == batch recomputation (ST4)."""
-    from minarrow_spark.streaming import hopping_counts
-
-    q = run_to_memory(
-        hopping_counts(read_event_stream(spark, replay)),
-        "hop_out",
-        output_mode="complete",
-    )
-    try:
-        streamed = spark.sql("SELECT * FROM hop_out")
-        batch = hopping_counts(load_table(spark, sf_dir, "events"))
-        assert _canon(streamed) == _canon(batch)
-    finally:
-        q.stop()
-
-
 def test_rollup_hll_distinct_users_accuracy(spark, sf_dir):
     """The rollup's mergeable HLL sketch answers distinct-users-per-window —
     the measure plain sums can't decompose. Estimate must land within the
@@ -673,73 +615,6 @@ def test_streaming_ann_kill_restart_exactly_once(spark, tmp_path):
         (r["q_id"], r["c_id"], r["sim"], r["rank"]) for r in twin.collect()
     )
     assert got == want and want
-
-
-def test_streaming_dedup_simhash_widths(spark, tmp_path):
-    """Simhash-mode streaming dedup (r6 verdict task 8): streamed verdicts
-    equal the one-shot batch twin at BOTH widths, and width='auto' resolves
-    once from the first batch and stays pinned in the state lineage."""
-    import json
-
-    from minarrow_spark.operators.dedup import augment_with_near_dups
-    from minarrow_spark.streaming.dedup import (
-        batch_twin,
-        dedup_writer,
-        verdicts,
-    )
-    from tests.conftest import SF_SMALL
-
-    docs = augment_with_near_dups(
-        spark.read.parquet(os.path.join(SF_SMALL, "documents.parquet"))
-    ).select("doc_id", "text")
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    width_ids = max(1, (hi - lo + 4) // 4)
-
-    for w in (32, 64):
-        state = str(tmp_path / f"state{w}")
-        out = str(tmp_path / f"out{w}")
-        wb = dedup_writer(state, out, method="simhash", width=w)
-        for b in range(4):  # id-ordered batches, the twin's arrival contract
-            chunk = docs.filter(
-                ((F.col("doc_id") - lo) / width_ids).cast("int") == b
-            )
-            wb(chunk, b)
-        got = {r["doc_id"]: r["is_dup"] for r in verdicts(spark, out).collect()}
-        want = {
-            r["doc_id"]: r["is_dup"]
-            for r in batch_twin(docs, method="simhash", width=w).collect()
-        }
-        assert got == want, f"width={w}"
-        assert sum(want.values()) > 0 and not all(want.values())
-
-    # 'auto' pins the first batch's choice in _WIDTH.json; every later
-    # batch reads the pinned value instead of re-deciding
-    state = str(tmp_path / "state_auto")
-    out = str(tmp_path / "out_auto")
-    wb = dedup_writer(state, out, method="simhash", width="auto")
-    wb(docs.filter(((F.col("doc_id") - lo) / width_ids).cast("int") == 0), 0)
-    with open(os.path.join(state, "_WIDTH.json")) as fh:
-        pinned = json.load(fh)
-    assert pinned["width"] in (32, 64)
-    wb(docs.filter(((F.col("doc_id") - lo) / width_ids).cast("int") == 1), 1)
-    with open(os.path.join(state, "_WIDTH.json")) as fh:
-        assert json.load(fh) == pinned  # unchanged by batch 2
-
-    # Explicit widths pin too (r7 ADVICE): reopening a lineage with a
-    # DIFFERENT concrete width must raise, not silently mix band keys.
-    other = 64 if pinned["width"] == 32 else 32
-    with pytest.raises(ValueError, match="pinned to width"):
-        dedup_writer(state, out, method="simhash", width=other)(
-            docs.filter(((F.col("doc_id") - lo) / width_ids).cast("int") == 2), 2
-        )
-    # Same width as the pin is fine, and an explicit width on a FRESH
-    # lineage writes its own pin.
-    state2 = str(tmp_path / "state_explicit")
-    dedup_writer(state2, str(tmp_path / "out_explicit"), method="simhash", width=32)(
-        docs.filter(((F.col("doc_id") - lo) / width_ids).cast("int") == 0), 0
-    )
-    with open(os.path.join(state2, "_WIDTH.json")) as fh:
-        assert json.load(fh)["width"] == 32
 
 
 def _jobs_run(spark, build) -> int:
